@@ -1393,27 +1393,7 @@ ORDER BY event_type
 """
 
 
-def _markov_trans_sql(events: str) -> str:
-    """The bounded <=|types|^2 transition-count matrix — the relation
-    every tail CTE of the stationary-distribution fold references (CTE
-    inlining expanded it through live/trans2/rt/p/tot_in/grand into 20
-    static corpus scans per statement, guide §3.3).  Split out so the
-    Spark side materializes it once per call; the Spark-only fold twin
-    passes it as ``trans_rel``."""
-    return f"""
-WITH seq AS (
-  SELECT user_id, event_type,
-         LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS next_type
-  FROM {events}
-)
-SELECT event_type AS from_type, next_type AS to_type,
-       CAST(COUNT(*) AS BIGINT) AS n
-FROM seq WHERE next_type IS NOT NULL GROUP BY event_type, next_type
-"""
-
-
-def _markov_stationary_fold_sql(events: str, trans_rel: str | None = None) -> str:
+def _markov_stationary_fold_sql(events: str) -> str:
     """Spark-side twin of :func:`_markov_stationary_sql` with the
     {MARKOV_ITERS} power iterations as ONE ``aggregate()`` fold over the
     collapsed bounded matrix instead of an unrolled CTE chain.  The chain
@@ -1425,13 +1405,18 @@ def _markov_stationary_fold_sql(events: str, trans_rel: str | None = None) -> st
     row, the mass vector is a map, and each step floor-divides per edge
     then sums — integer arithmetic identical to the unrolled form
     (bit-equality pytest-pinned; same Python twin test applies)."""
-    trans = (
-        f"SELECT * FROM {trans_rel}"
-        if trans_rel
-        else _markov_trans_sql(events)
-    )
     return f"""
-WITH trans AS ({trans}),
+WITH seq AS (
+  SELECT user_id, event_type,
+         LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+           AS next_type
+  FROM {events}
+),
+trans AS (
+  SELECT event_type AS from_type, next_type AS to_type,
+         CAST(COUNT(*) AS BIGINT) AS n
+  FROM seq WHERE next_type IS NOT NULL GROUP BY event_type, next_type
+),
 live AS (SELECT DISTINCT from_type AS ty FROM trans),
 trans2 AS (SELECT t.* FROM trans t JOIN live l ON l.ty = t.to_type),
 rt AS (SELECT from_type, CAST(SUM(n) AS BIGINT) AS tot FROM trans2 GROUP BY from_type),
@@ -1510,21 +1495,8 @@ ORDER BY event_type
     tags=("analytics", "markov", "iteration"),
 )
 def markov_stationary_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
     load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_mk_ev")
-    # Materialize the bounded transition matrix once (guide §3.3):
-    # live/trans2/rt/p/tot_in/grand expanded the windowed corpus pass into
-    # 20 static scans per statement.  One checkpoint -> one corpus pass.
-    trans = materialize_once(
-        spark,
-        _markov_trans_sql("sales_telegram_bot_data_pipeline_mk_ev"),
-        "mk_trans",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _markov_stationary_fold_sql("sales_telegram_bot_data_pipeline_mk_ev", trans_rel=trans)
-    )
+    return spark.sql(_markov_stationary_fold_sql("sales_telegram_bot_data_pipeline_mk_ev"))
 
 
 # --------------------------------------------------------------------------
@@ -1532,15 +1504,13 @@ def markov_stationary_distribution(spark: SparkSession, sf_dir: str) -> DataFram
 # --------------------------------------------------------------------------
 ACF_MAX_LAG = 14
 
-_ACF_DAILY_SQL = """
-SELECT CAST({dayno} AS BIGINT) AS day,
-       CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-                     AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS cents
-FROM {orders} GROUP BY 1
-"""
-
 _ACF_SQL = """
-WITH daily AS ({daily}),
+WITH daily AS (
+  SELECT CAST({dayno} AS BIGINT) AS day,
+         CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                       AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS cents
+  FROM {orders} GROUP BY 1
+),
 tot AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n,
          CAST(SUM(cents) AS DECIMAL(38,0)) AS s
@@ -1572,10 +1542,8 @@ ORDER BY n.lag
 @register(
     "acf_daily_revenue",
     oracle=_ACF_SQL.format(
-        daily=_ACF_DAILY_SQL.format(
-            dayno="datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))",
-            orders="orders",
-        ),
+        dayno="datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))",
+        orders="orders",
         lags_rel=f"SELECT unnest(generate_series(1, {ACF_MAX_LAG})) AS lag",
     ),
     doc=f"Autocorrelation of daily revenue at lags 1..{ACF_MAX_LAG} — the "
@@ -1589,23 +1557,11 @@ ORDER BY n.lag
     tags=("analytics", "timeseries", "self-join"),
 )
 def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_acf_o")
-    # Materialize the bounded day-grid series once (guide §3.3): the
-    # dev/den/num chain expanded it into 12 static corpus scans.
-    daily = materialize_once(
-        spark,
-        _ACF_DAILY_SQL.format(
-            dayno="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-            orders="sales_telegram_bot_data_pipeline_acf_o",
-        ),
-        "acf_daily",
-        key=sf_dir,
-    )
     return spark.sql(
         _ACF_SQL.format(
-            daily=f"SELECT * FROM {daily}",
+            dayno="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
+            orders="sales_telegram_bot_data_pipeline_acf_o",
             lags_rel=f"SELECT explode(sequence(1, {ACF_MAX_LAG})) AS lag",
         )
     )

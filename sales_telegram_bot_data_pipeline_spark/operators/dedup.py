@@ -1690,24 +1690,15 @@ ORDER BY contained_doc, container_doc
     tags=("dedup", "join", "text"),
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
     view = _containment_corpus(SPARK, _doc_view(spark, sf_dir))
     # Shingling is doc-local, so the md5-subset corpus's shingles are
     # EXACTLY the stored shingle table filtered by the same doc_id
     # predicate — production filters the written shingle table rather
     # than re-exploding the subset (the curation_pipeline_v2 move).
-    # The filtered subset materializes once per call (r14, guide §3.3):
-    # the statement references `shingles` five times (sdf, idx, counts,
-    # and both refine sides), and each reference re-filtered — and
-    # re-md5-hashed every doc_id of — the full stored shingle relation.
     sub = f"{SPARK.md5_prefix_int(SPARK.strcast('doc_id'))} % {CNT_SUBSET_MOD} = 0"
-    rel = "SELECT doc_id, sh FROM " + materialize_once(
-        spark,
+    rel = (
         f"SELECT doc_id, sh FROM ({_shingles_session_rel(spark, sf_dir)}) ss "
-        f"WHERE {sub}",
-        "cnt_shingles",
-        key=sf_dir,
+        f"WHERE {sub}"
     )
     return spark.sql(_containment_sql(SPARK, view, shingles_rel=rel))
 

@@ -433,7 +433,7 @@ def score_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 KN_DISCOUNT = 0.75  # the standard fixed discount (Chen & Goodman 1999)
 
 
-def _kneser_ney_sql(d: Dialect, table: str, tgt_bi_rel: str | None = None) -> str:
+def _kneser_ney_sql(d: Dialect, table: str) -> str:
     """Interpolated Kneser-Ney (Kneser & Ney 1995; Chen & Goodman 1999
     formulation) — the stronger sibling of the add-smoothing bigram LM:
 
@@ -454,15 +454,10 @@ def _kneser_ney_sql(d: Dialect, table: str, tgt_bi_rel: str | None = None) -> st
     tgt = f" WHERE doc_id % {BENCH_MOD} = 0"
     rest = f" WHERE doc_id % {BENCH_MOD} <> 0"
     D = KN_DISCOUNT
-    tgt_bi = (
-        f"SELECT w1, w2, c2 FROM {tgt_bi_rel}"
-        if tgt_bi_rel
-        else f"""
-  SELECT w1, w2, COUNT(*) AS c2 FROM ({_bigram_rel(d, table, tgt)}) tb GROUP BY w1, w2
-"""
-    )
     return f"""
-WITH tgt_bi AS ({tgt_bi}),
+WITH tgt_bi AS (
+  SELECT w1, w2, COUNT(*) AS c2 FROM ({_bigram_rel(d, table, tgt)}) tb GROUP BY w1, w2
+),
 ctx AS (
   SELECT w1, SUM(c2) AS ctx_tot, COUNT(*) AS n1p_fwd FROM tgt_bi GROUP BY w1
 ),
@@ -517,21 +512,7 @@ ORDER BY doc_id
     tags=("quality", "lm", "text"),
 )
 def kneser_ney_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    view = _doc_view(spark, sf_dir)
-    # Materialize the trained bigram model once (guide §3.3): ctx, cont,
-    # the two tot scalar subqueries and the scoring join each re-ran the
-    # target-subset bigram explode (12 static scans per statement); the
-    # scoring side's own explode stays the one remaining corpus pass.
-    tgt = f" WHERE doc_id % {BENCH_MOD} = 0"
-    tgt_bi = materialize_once(
-        spark,
-        f"SELECT w1, w2, COUNT(*) AS c2 FROM ({_bigram_rel(SPARK, view, tgt)}) tb GROUP BY w1, w2",
-        "kn_tgt_bi",
-        key=sf_dir,
-    )
-    return spark.sql(_kneser_ney_sql(SPARK, view, tgt_bi_rel=tgt_bi))
+    return spark.sql(_kneser_ney_sql(SPARK, _doc_view(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------

@@ -71,20 +71,12 @@ _CENTS = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
 # --------------------------------------------------------------------------
 # Brown-Forsythe / Levene homogeneity of variance
 # --------------------------------------------------------------------------
-def _levene_cells_sql(d: Dialect, table: str) -> str:
-    """The bounded (source x n_chars) cell grid every downstream CTE
-    references — split out so the Spark side can materialize it once per
-    call (guide §3.3: CTE inlining re-scanned the corpus per reference,
-    24 executed scans for one statement)."""
+def _levene_sql(d: Dialect, table: str) -> str:
     return f"""
+WITH cells AS (
   SELECT source, CAST(n_chars AS BIGINT) AS v, CAST(COUNT(*) AS BIGINT) AS c
   FROM {table} GROUP BY source, n_chars
-"""
-
-
-def _levene_sql(d: Dialect, table: str, cells_rel: str | None = None) -> str:
-    return f"""
-WITH cells AS ({cells_rel or _levene_cells_sql(d, table)}),
+),
 gtot AS (SELECT source, CAST(SUM(c) AS BIGINT) AS n_g FROM cells GROUP BY source),
 cum AS (
   SELECT source, v, c,
@@ -174,11 +166,8 @@ ORDER BY te.source
     tags=("analytics", "stats", "agg"),
 )
 def levene_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
     view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_lev_docs")
-    cells = materialize_once(spark, _levene_cells_sql(SPARK, view), "lev_cells", key=sf_dir)
-    return spark.sql(_levene_sql(SPARK, view, cells_rel=f"SELECT * FROM {cells}"))
+    return spark.sql(_levene_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -233,26 +222,25 @@ def hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Theil T inequality with within/between decomposition
 # --------------------------------------------------------------------------
-_THEIL_BASE = """base AS (
-  SELECT c.c_mktsegment AS seg, {cents} AS x
+def _theil_sql(d: Dialect, orders: str, customer: str) -> str:
+    return f"""
+WITH base AS (
+  SELECT c.c_mktsegment AS seg, {_CENTS} AS x
   FROM {orders} o JOIN {customer} c ON c.c_custkey = o.o_custkey
-)"""
-
-_THEIL_G_BODY = """
+),
+g AS (
   SELECT seg, CAST(COUNT(*) AS BIGINT) AS n_g,
          CAST(SUM(x) AS DECIMAL(38,0)) AS s_g
   FROM base GROUP BY seg
-"""
-
-_THEIL_TOT = """tot AS (
+),
+tot AS (
   SELECT CAST(SUM(n_g) AS BIGINT) AS n, CAST(SUM(s_g) AS DECIMAL(38,0)) AS s
   FROM g
-)"""
-
-# per-row total-Theil term (x/mu) ln(x/mu), mu = S/N, nano-quantized
-# per row so the data-scale sum is exact and order-independent; and the
-# per-row WITHIN-group term against the group mean mu_g = s_g/n_g
-_THEIL_ROWTERMS = """rowterms AS (
+),
+-- per-row total-Theil term (x/mu) ln(x/mu), mu = S/N, nano-quantized
+-- per row so the data-scale sum is exact and order-independent; and the
+-- per-row WITHIN-group term against the group mean mu_g = s_g/n_g
+rowterms AS (
   SELECT b.seg,
          CAST(FLOOR((CAST(b.x AS DOUBLE) * t.n / CAST(t.s AS DOUBLE))
               * LN(CAST(b.x AS DOUBLE) * t.n / CAST(t.s AS DOUBLE))
@@ -263,58 +251,13 @@ _THEIL_ROWTERMS = """rowterms AS (
   FROM base b
   JOIN g ON g.seg = b.seg
   CROSS JOIN tot t
-)"""
-
-_THEIL_GSUM_BODY = """
+),
+gsum AS (
   SELECT seg,
          CAST(SUM(t_tot_nano) AS BIGINT) AS st_nano,
          CAST(SUM(t_wtn_nano) AS BIGINT) AS sw_nano
   FROM rowterms GROUP BY seg
-"""
-
-
-def _theil_g_sql(d: Dialect, orders: str, customer: str) -> str:
-    """The 5-row per-segment exact-sum relation — the head every tail CTE
-    of the Theil decomposition references (CTE inlining expanded it into
-    ~20 executed corpus scans per statement, guide §3.3).  Split out so
-    the Spark side materializes it once per call."""
-    base = _THEIL_BASE.format(cents=_CENTS, orders=orders, customer=customer)
-    return f"WITH {base}\n{_THEIL_G_BODY}"
-
-
-def _theil_gsum_sql(d: Dialect, orders: str, customer: str, g_rel: str) -> str:
-    """The 5-row per-segment nano-quantized term sums: ONE corpus pass
-    (base JOIN the materialized g), materialized once per call."""
-    base = _THEIL_BASE.format(cents=_CENTS, orders=orders, customer=customer)
-    return (
-        f"WITH {base},\ng AS (SELECT * FROM {g_rel}),\n{_THEIL_TOT},\n"
-        f"{_THEIL_ROWTERMS}\n{_THEIL_GSUM_BODY}"
-    )
-
-
-def _theil_sql(
-    d: Dialect,
-    orders: str,
-    customer: str,
-    g_rel: str | None = None,
-    gsum_rel: str | None = None,
-) -> str:
-    base = _THEIL_BASE.format(cents=_CENTS, orders=orders, customer=customer)
-    withs = []
-    if g_rel is None or gsum_rel is None:
-        withs.append(base)
-    withs.append(
-        f"g AS (SELECT * FROM {g_rel})" if g_rel else f"g AS ({_THEIL_G_BODY})"
-    )
-    withs.append(_THEIL_TOT)
-    if gsum_rel is None:
-        withs.append(_THEIL_ROWTERMS)
-    withs.append(
-        f"gsum AS (SELECT * FROM {gsum_rel})"
-        if gsum_rel
-        else f"gsum AS ({_THEIL_GSUM_BODY})"
-    )
-    return "WITH " + ",\n".join(withs) + f""",
+),
 -- between-group term s_share_g * ln(s_share_g / n_share_g), nano-
 -- quantized per group before the k-row sum
 btw AS (
@@ -360,38 +303,10 @@ ORDER BY g.seg
     tags=("analytics", "stats", "agg"),
 )
 def theil_inequality_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_th_o")
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_th_c")
-    # Materialize the two 5-row per-segment heads once each (guide §3.3):
-    # CTE inlining expanded g/gsum through tot x rowterms x btw x scal x
-    # the final projection into ~20 executed corpus scans per call.  Two
-    # bounded checkpoints -> exactly two corpus passes (g build, gsum
-    # build); the main statement below reads only the views.  The oracle
-    # keeps the single-statement form.
-    g = materialize_once(
-        spark,
-        _theil_g_sql(SPARK, "sales_telegram_bot_data_pipeline_th_o", "sales_telegram_bot_data_pipeline_th_c"),
-        "th_g",
-        key=sf_dir,
-    )
-    gsum = materialize_once(
-        spark,
-        _theil_gsum_sql(
-            SPARK, "sales_telegram_bot_data_pipeline_th_o", "sales_telegram_bot_data_pipeline_th_c", g
-        ),
-        "th_gsum",
-        key=sf_dir,
-    )
     return spark.sql(
-        _theil_sql(
-            SPARK,
-            "sales_telegram_bot_data_pipeline_th_o",
-            "sales_telegram_bot_data_pipeline_th_c",
-            g_rel=g,
-            gsum_rel=gsum,
-        )
+        _theil_sql(SPARK, "sales_telegram_bot_data_pipeline_th_o", "sales_telegram_bot_data_pipeline_th_c")
     )
 
 
@@ -489,30 +404,17 @@ def granger_lag_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LB_LAGS = 7
 
 
-def _ljung_box_daily_sql(d: Dialect, orders: str) -> str:
-    """The bounded day-grid revenue series — the relation every tail CTE
-    of the Ljung-Box statistic references (CTE inlining expanded it into
-    16 static corpus scans per statement, guide §3.3)."""
-    dayno = _DAYNO[d.name]
-    return f"""
-SELECT CAST({dayno} AS BIGINT) AS day,
-       CAST(SUM({_CENTS}) AS DECIMAL(38,0)) AS cents
-FROM {orders} GROUP BY 1
-"""
-
-
-def _ljung_box_sql(d: Dialect, orders: str, daily_rel: str | None = None) -> str:
+def _ljung_box_sql(d: Dialect, orders: str) -> str:
     if d.name == "spark":
         lags_rel = f"SELECT explode(sequence(1, {_LB_LAGS})) AS lag"
     else:
         lags_rel = f"SELECT unnest(generate_series(1, {_LB_LAGS})) AS lag"
-    daily = (
-        f"SELECT * FROM {daily_rel}"
-        if daily_rel
-        else _ljung_box_daily_sql(d, orders)
-    )
     return f"""
-WITH daily AS ({daily}),
+WITH daily AS (
+  SELECT CAST({_DAYNO[d.name]} AS BIGINT) AS day,
+         CAST(SUM({_CENTS}) AS DECIMAL(38,0)) AS cents
+  FROM {orders} GROUP BY 1
+),
 tot AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(cents) AS DECIMAL(38,0)) AS s
   FROM daily
@@ -564,18 +466,8 @@ FROM tot t CROSS JOIN agg a
     tags=("analytics", "timeseries", "stats"),
 )
 def ljung_box_whiteness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_lb_o")
-    daily = materialize_once(
-        spark,
-        _ljung_box_daily_sql(SPARK, "sales_telegram_bot_data_pipeline_lb_o"),
-        "lb_daily",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _ljung_box_sql(SPARK, "sales_telegram_bot_data_pipeline_lb_o", daily_rel=daily)
-    )
+    return spark.sql(_ljung_box_sql(SPARK, "sales_telegram_bot_data_pipeline_lb_o"))
 
 
 # --------------------------------------------------------------------------
@@ -759,11 +651,7 @@ def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # two-group logrank test (BUILDING vs rest) on repurchase survival
 # --------------------------------------------------------------------------
-def _logrank_cells_sql(d: Dialect, orders: str, customer: str) -> str:
-    """The bounded (group x day) event/censor cell grid — the relation
-    every tail CTE of the logrank test references (CTE inlining expanded
-    it into 40 static corpus scans per statement, guide §3.3).  Split out
-    so the Spark side materializes it once per call."""
+def _logrank_sql(d: Dialect, orders: str, customer: str) -> str:
     dd_event = (
         "datediff(s.d2, s.d1)" if d.name == "spark"
         else "datediff('day', s.d1, s.d2)"
@@ -793,24 +681,13 @@ cohort AS (
          CASE WHEN s.d2 IS NOT NULL THEN 1 ELSE 0 END AS ev
   FROM seconds s CROSS JOIN horizon h
   JOIN {customer} c ON c.c_custkey = s.ck
-)
-SELECT g, t,
-       CAST(SUM(ev) AS BIGINT) AS dd,
-       CAST(SUM(1 - ev) AS BIGINT) AS cc
-FROM cohort GROUP BY g, t
-"""
-
-
-def _logrank_sql(
-    d: Dialect, orders: str, customer: str, cells_rel: str | None = None
-) -> str:
-    cells = (
-        f"SELECT * FROM {cells_rel}"
-        if cells_rel
-        else _logrank_cells_sql(d, orders, customer)
-    )
-    return f"""
-WITH cells AS ({cells}),
+),
+cells AS (
+  SELECT g, t,
+         CAST(SUM(ev) AS BIGINT) AS dd,
+         CAST(SUM(1 - ev) AS BIGINT) AS cc
+  FROM cohort GROUP BY g, t
+),
 gtot AS (SELECT g, CAST(SUM(dd + cc) AS BIGINT) AS n_g FROM cells GROUP BY g),
 taxis AS (SELECT DISTINCT t FROM cells),
 dense AS (
@@ -886,29 +763,10 @@ FROM agg a
     tags=("evaluation", "survival", "stats"),
 )
 def logrank_test_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_lr_o")
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_lr_c")
-    # Materialize the bounded (group x day) cell grid once (guide §3.3):
-    # gtot/taxis/dense plus the two gtot scalar subqueries expanded the
-    # cohort chain into 40 static corpus scans per statement.  One
-    # checkpoint -> one cohort build; the statement reads only the view.
-    cells = materialize_once(
-        spark,
-        _logrank_cells_sql(
-            SPARK, "sales_telegram_bot_data_pipeline_lr_o", "sales_telegram_bot_data_pipeline_lr_c"
-        ),
-        "lr_cells",
-        key=sf_dir,
-    )
     return spark.sql(
-        _logrank_sql(
-            SPARK,
-            "sales_telegram_bot_data_pipeline_lr_o",
-            "sales_telegram_bot_data_pipeline_lr_c",
-            cells_rel=cells,
-        )
+        _logrank_sql(SPARK, "sales_telegram_bot_data_pipeline_lr_o", "sales_telegram_bot_data_pipeline_lr_c")
     )
 
 

@@ -131,25 +131,13 @@ def gumbel_block_maxima_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Friedman rank test (tie-corrected, fully integer)
 # --------------------------------------------------------------------------
-def _friedman_cells_sql(d: Dialect, events: str) -> str:
-    """The bounded (day x type) count grid — the relation every tail CTE
-    of the Friedman test references (CTE inlining expanded it into 16
-    static corpus scans per statement, guide §3.3)."""
+def _friedman_sql(d: Dialect, events: str) -> str:
     day = "to_date(ts)" if d.name == "spark" else "CAST(ts AS DATE)"
     return f"""
-SELECT {day} AS day, event_type, CAST(COUNT(*) AS BIGINT) AS cnt
-FROM {events} GROUP BY 1, 2
-"""
-
-
-def _friedman_sql(d: Dialect, events: str, cells_rel: str | None = None) -> str:
-    cells = (
-        f"SELECT * FROM {cells_rel}"
-        if cells_rel
-        else _friedman_cells_sql(d, events)
-    )
-    return f"""
-WITH cells AS ({cells}),
+WITH cells AS (
+  SELECT {day} AS day, event_type, CAST(COUNT(*) AS BIGINT) AS cnt
+  FROM {events} GROUP BY 1, 2
+),
 types AS (SELECT DISTINCT event_type FROM cells),
 days AS (SELECT DISTINCT day FROM cells),
 dense AS (
@@ -213,42 +201,20 @@ ORDER BY c.event_type
     tags=("analytics", "stats", "agg"),
 )
 def friedman_rank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
     load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_fr_ev")
-    cells = materialize_once(
-        spark,
-        _friedman_cells_sql(SPARK, "sales_telegram_bot_data_pipeline_fr_ev"),
-        "fr_cells",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _friedman_sql(SPARK, "sales_telegram_bot_data_pipeline_fr_ev", cells_rel=cells)
-    )
+    return spark.sql(_friedman_sql(SPARK, "sales_telegram_bot_data_pipeline_fr_ev"))
 
 
 # --------------------------------------------------------------------------
 # Cramer's V with Bergsma bias correction
 # --------------------------------------------------------------------------
-def _cramers_cells_sql(d: Dialect, orders: str) -> str:
-    """The bounded 5x3 contingency grid — the relation every tail CTE of
-    the Cramer's V statistic references (CTE inlining expanded it into 14
-    static corpus scans per statement, guide §3.3)."""
+def _cramers_sql(d: Dialect, orders: str) -> str:
     return f"""
-SELECT o_orderpriority AS a, o_orderstatus AS b,
-       CAST(COUNT(*) AS BIGINT) AS c
-FROM {orders} GROUP BY 1, 2
-"""
-
-
-def _cramers_sql(d: Dialect, orders: str, cells_rel: str | None = None) -> str:
-    cells = (
-        f"SELECT * FROM {cells_rel}"
-        if cells_rel
-        else _cramers_cells_sql(d, orders)
-    )
-    return f"""
-WITH cells AS ({cells}),
+WITH cells AS (
+  SELECT o_orderpriority AS a, o_orderstatus AS b,
+         CAST(COUNT(*) AS BIGINT) AS c
+  FROM {orders} GROUP BY 1, 2
+),
 ra AS (SELECT a, CAST(SUM(c) AS BIGINT) AS ca FROM cells GROUP BY a),
 cb AS (SELECT b, CAST(SUM(c) AS BIGINT) AS cb FROM cells GROUP BY b),
 tot AS (
@@ -303,18 +269,8 @@ FROM fin
     tags=("analytics", "stats", "agg"),
 )
 def cramers_v_bias_corrected(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_cv_o")
-    cells = materialize_once(
-        spark,
-        _cramers_cells_sql(SPARK, "sales_telegram_bot_data_pipeline_cv_o"),
-        "cv_cells",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _cramers_sql(SPARK, "sales_telegram_bot_data_pipeline_cv_o", cells_rel=cells)
-    )
+    return spark.sql(_cramers_sql(SPARK, "sales_telegram_bot_data_pipeline_cv_o"))
 
 
 # --------------------------------------------------------------------------
@@ -324,13 +280,7 @@ _KATZ_ITERS = 6
 _KATZ_TOPK = 20
 
 
-def _katz_sql(
-    d: Dialect,
-    table: str,
-    pairs_rel: str | None = None,
-    edges_rel: str | None = None,
-    nodes_rel: str | None = None,
-) -> str:
+def _katz_sql(d: Dialect, table: str, pairs_rel: str | None = None) -> str:
     from .dedup import _lsh_pairs_sql
     from ..functions.dialect import strip_order_by
 
@@ -353,23 +303,13 @@ def _katz_sql(
         )
         prev = nxt
     steps_sql = ",\n".join(steps)
-    edges = (
-        f"SELECT * FROM {edges_rel}"
-        if edges_rel
-        else f"""
+    return f"""
+WITH edges AS (
   SELECT doc_a AS u, doc_b AS v FROM (SELECT doc_a, doc_b FROM {pairs} pr) p
   UNION ALL
   SELECT doc_b AS u, doc_a AS v FROM (SELECT doc_a, doc_b FROM {pairs} pr) p
-"""
-    )
-    nodes = (
-        f"SELECT * FROM {nodes_rel}"
-        if nodes_rel
-        else "SELECT DISTINCT u AS node FROM edges"
-    )
-    return f"""
-WITH edges AS ({edges}),
-nodes AS ({nodes}),
+),
+nodes AS (SELECT DISTINCT u AS node FROM edges),
 x0 AS (SELECT node, CAST({one} AS BIGINT) AS x FROM nodes),
 {steps_sql}
 SELECT node AS doc_id,
@@ -394,38 +334,16 @@ LIMIT {_KATZ_TOPK}
     tags=("analytics", "graph", "iteration", "topk"),
 )
 def katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
     from .dedup import _lsh_pairs_view
 
     view = _doc_view(spark, sf_dir)
-    # Materialize the symmetric edge list and node set once (guide §3.3):
-    # every unrolled iteration re-derived both from the pair view (38
-    # static Exchanges per statement); two bounded checkpoints leave one
-    # join + one aggregation per iteration.
-    pairs = _lsh_pairs_view(spark, sf_dir)
-    edges = materialize_once(
-        spark,
-        f"SELECT doc_a AS u, doc_b AS v FROM {pairs}\n"
-        f"UNION ALL\nSELECT doc_b AS u, doc_a AS v FROM {pairs}",
-        "katz_edges",
-        key=sf_dir,
-    )
-    nodes = materialize_once(
-        spark,
-        f"SELECT DISTINCT u AS node FROM {edges}",
-        "katz_nodes",
-        key=sf_dir,
-    )
-    return spark.sql(_katz_sql(SPARK, view, edges_rel=edges, nodes_rel=nodes))
+    return spark.sql(_katz_sql(SPARK, view, pairs_rel=_lsh_pairs_view(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
 # SAX symbolic series + 3-day motifs
 # --------------------------------------------------------------------------
-def _sax_symbols_sql(d: Dialect, orders: str) -> str:
-    """The bounded day-grid SAX symbol series — the relation the 3-way
-    motif self-join references (12 static corpus scans per statement,
-    guide §3.3)."""
+def _sax_sql(d: Dialect, orders: str) -> str:
     dayno = _DAYNO[d.name]
     # N(0,1) quartile breakpoints for a 4-symbol alphabet
     sym = (
@@ -451,19 +369,10 @@ z AS (
          / NULLIF(SQRT(CAST(mm.n * mm.s2 - mm.s1 * mm.s1 AS DOUBLE)
                        / mm.n / (mm.n - 1)), 0) AS z
   FROM daily dd CROSS JOIN m mm
-)
-SELECT day, {sym} AS s FROM z
-"""
-
-
-def _sax_sql(d: Dialect, orders: str, sax_rel: str | None = None) -> str:
-    sax = (
-        f"SELECT * FROM {sax_rel}"
-        if sax_rel
-        else _sax_symbols_sql(d, orders)
-    )
-    return f"""
-WITH sax AS ({sax}),
+),
+sax AS (
+  SELECT day, {sym} AS s FROM z
+),
 -- 3-day motif words via exact consecutive-day self-joins (adf pattern)
 words AS (
   SELECT a.s || b.s || c.s AS motif
@@ -491,34 +400,19 @@ ORDER BY n_occurrences DESC, motif
     tags=("analytics", "timeseries", "agg"),
 )
 def sax_daily_revenue_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_sax_o")
-    sax = materialize_once(
-        spark,
-        _sax_symbols_sql(SPARK, "sales_telegram_bot_data_pipeline_sax_o"),
-        "sax_syms",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _sax_sql(SPARK, "sales_telegram_bot_data_pipeline_sax_o", sax_rel=sax)
-    )
+    return spark.sql(_sax_sql(SPARK, "sales_telegram_bot_data_pipeline_sax_o"))
 
 
 # --------------------------------------------------------------------------
 # mutual information of (source, lang)
 # --------------------------------------------------------------------------
-def _mi_sql(d: Dialect, table: str, cells_rel: str | None = None) -> str:
-    cells = (
-        f"SELECT * FROM {cells_rel}"
-        if cells_rel
-        else f"""
+def _mi_sql(d: Dialect, table: str) -> str:
+    return f"""
+WITH cells AS (
   SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS c
   FROM {table} GROUP BY source, lang
-"""
-    )
-    return f"""
-WITH cells AS ({cells}),
+),
 ms AS (SELECT source, CAST(SUM(c) AS BIGINT) AS cs FROM cells GROUP BY source),
 ml AS (SELECT lang, CAST(SUM(c) AS BIGINT) AS cl FROM cells GROUP BY lang),
 tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM cells),
@@ -573,19 +467,8 @@ FROM tot t CROSS JOIN agg a
     tags=("analytics", "stats", "text"),
 )
 def mutual_information_source_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
     view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_mi_docs")
-    # Materialize the bounded contingency grid once (guide §3.3): the
-    # ms/ml/tot marginals and three term CTEs expanded it into 18 static
-    # corpus scans per statement.
-    cells = materialize_once(
-        spark,
-        f"SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS c FROM {view} GROUP BY source, lang",
-        "mi_cells",
-        key=sf_dir,
-    )
-    return spark.sql(_mi_sql(SPARK, view, cells_rel=cells))
+    return spark.sql(_mi_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------

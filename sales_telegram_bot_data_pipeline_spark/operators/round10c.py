@@ -45,11 +45,10 @@ _LN105 = "0.04879016416943205e0"  # ln(1.05)
 # --------------------------------------------------------------------------
 # Qini uplift curve
 # --------------------------------------------------------------------------
-def _qini_cells_sql(d: Dialect, users_ranked: str) -> str:
-    """The 10-row decile cell grid — the relation every tail CTE of the
-    Qini curve references (CTE inlining re-executed the whole ranked-user
-    pipeline per reference: 84 static Exchanges for one statement, guide
-    §3.3).  Split out so the Spark side materializes it once per call."""
+def _qini_tail_sql(d: Dialect, users_ranked: str) -> str:
+    """From (user_id, treated, converted, r) 1-based rank rows: deciles,
+    cumulative counts via a triangular join on the bounded decile axis,
+    Qini curve and coefficient."""
     return f"""
 WITH u AS (SELECT * FROM {users_ranked}),
 n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM u),
@@ -57,29 +56,15 @@ dec AS (
   SELECT CAST({d.idiv("(u.r - 1) * 10", "nn.n")} AS INT) AS decile,
          u.treated, u.converted
   FROM u CROSS JOIN n nn
-)
-SELECT decile,
-       CAST(SUM(treated) AS BIGINT) AS nt,
-       CAST(SUM(1 - treated) AS BIGINT) AS nc,
-       CAST(SUM(treated * converted) AS BIGINT) AS ct,
-       CAST(SUM((1 - treated) * converted) AS BIGINT) AS cc
-FROM dec GROUP BY decile
-"""
-
-
-def _qini_tail_sql(
-    d: Dialect, users_ranked: str, cells_rel: str | None = None
-) -> str:
-    """From (user_id, treated, converted, r) 1-based rank rows: deciles,
-    cumulative counts via a triangular join on the bounded decile axis,
-    Qini curve and coefficient."""
-    cells = (
-        f"SELECT * FROM {cells_rel}"
-        if cells_rel
-        else _qini_cells_sql(d, users_ranked)
-    )
-    return f"""
-WITH cells AS ({cells}),
+),
+cells AS (
+  SELECT decile,
+         CAST(SUM(treated) AS BIGINT) AS nt,
+         CAST(SUM(1 - treated) AS BIGINT) AS nc,
+         CAST(SUM(treated * converted) AS BIGINT) AS ct,
+         CAST(SUM((1 - treated) * converted) AS BIGINT) AS cc
+  FROM dec GROUP BY decile
+),
 -- cumulative over the bounded 10-row decile axis: triangular self-join,
 -- no window needed
 cum AS (
@@ -171,22 +156,10 @@ def qini_uplift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(0.0 AS DOUBLE) AS qini_coefficient WHERE 1 = 0"
         )
     ranked.createOrReplaceTempView("sales_telegram_bot_data_pipeline_qn_ranked")
-    from ..session import materialize_once
-
-    cells = materialize_once(
-        spark,
-        _qini_cells_sql(
-            SPARK,
-            "(SELECT user_id, treated, converted, r FROM sales_telegram_bot_data_pipeline_qn_ranked)",
-        ),
-        "qn_cells",
-        key=sf_dir,
-    )
     return spark.sql(
         _qini_tail_sql(
             SPARK,
             "(SELECT user_id, treated, converted, r FROM sales_telegram_bot_data_pipeline_qn_ranked)",
-            cells_rel=cells,
         )
     )
 

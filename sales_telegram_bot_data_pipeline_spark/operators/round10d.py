@@ -42,25 +42,12 @@ from .curation import _doc_view
 # --------------------------------------------------------------------------
 # Kruskal-Wallis with tie correction (bounded value grid)
 # --------------------------------------------------------------------------
-def _kruskal_cells_sql(d: Dialect, table: str) -> str:
-    """The bounded (source x value) count grid — the relation every tail
-    CTE of the Kruskal-Wallis statistic references (CTE inlining expanded
-    it into 18 static corpus scans per statement, guide §3.3).  Split out
-    so the Spark side materializes it once per call."""
+def _kruskal_sql(d: Dialect, table: str) -> str:
     return f"""
-SELECT source, CAST(n_chars AS BIGINT) AS v, CAST(COUNT(*) AS BIGINT) AS c
-FROM {table} GROUP BY source, n_chars
-"""
-
-
-def _kruskal_sql(d: Dialect, table: str, cells_rel: str | None = None) -> str:
-    cells = (
-        f"SELECT * FROM {cells_rel}"
-        if cells_rel
-        else _kruskal_cells_sql(d, table)
-    )
-    return f"""
-WITH cells AS ({cells}),
+WITH cells AS (
+  SELECT source, CAST(n_chars AS BIGINT) AS v, CAST(COUNT(*) AS BIGINT) AS c
+  FROM {table} GROUP BY source, n_chars
+),
 vals AS (SELECT v, CAST(SUM(c) AS BIGINT) AS cv FROM cells GROUP BY v),
 -- value-axis cumulative via the triangular join on the BOUNDED value
 -- grid (|distinct n_chars| rows — never the corpus); R2(v) =
@@ -138,16 +125,8 @@ ORDER BY gg.source
     tags=("analytics", "stats", "agg"),
 )
 def kruskal_wallis_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
     view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_kw_docs")
-    # Materialize the bounded (source x value) grid once (guide §3.3):
-    # vals/ranks/g/ties expanded it into 18 static corpus scans per
-    # statement.  The oracle keeps the single-statement form.
-    cells = materialize_once(
-        spark, _kruskal_cells_sql(SPARK, view), "kw_cells", key=sf_dir
-    )
-    return spark.sql(_kruskal_sql(SPARK, view, cells_rel=cells))
+    return spark.sql(_kruskal_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -163,11 +142,10 @@ SELECT source FROM (
 
 def _src2_cells_sql(d: Dialect, table: str) -> str:
     """Side-tagged per-value count grid of the two lexicographically-first
-    sources with the source labels carried on the rows — the shared head
-    of cramer_von_mises / cles / hellinger (CTE inlining expanded lo/hi/
-    ga/gb into 20-36 static corpus scans per statement, guide §3.3).
-    Split out so each Spark side materializes it once per call; the
-    bounded |V| value grid is orders of magnitude below the corpus."""
+    sources with the source labels carried on the rows — the head that
+    cramer_von_mises and hellinger materialize once per call (both are
+    measured keeps in PERF_NOTES.md); the bounded |V| value grid is orders
+    of magnitude below the corpus."""
     return f"""
 WITH two AS ({_hl_sources_rel(d, table)}),
 lo AS (SELECT MIN(source) AS s FROM two),

@@ -42,25 +42,13 @@ _DAYNO = {
 # --------------------------------------------------------------------------
 # single changepoint by binary segmentation (between-segment SS argmax)
 # --------------------------------------------------------------------------
-def _binseg_daily_sql(d: Dialect, orders: str) -> str:
-    """The bounded day-grid revenue series the triangular prefix join
-    re-references (12 static scans per statement, guide §3.3)."""
-    dayno = _DAYNO[d.name]
+def _binseg_sql(d: Dialect, orders: str) -> str:
     return f"""
-SELECT CAST({dayno} AS BIGINT) AS day,
-       CAST(SUM({_CENTS}) AS DECIMAL(38,0)) AS y
-FROM {orders} GROUP BY 1
-"""
-
-
-def _binseg_sql(d: Dialect, orders: str, daily_rel: str | None = None) -> str:
-    daily = (
-        f"SELECT * FROM {daily_rel}"
-        if daily_rel
-        else _binseg_daily_sql(d, orders)
-    )
-    return f"""
-WITH daily AS ({daily}),
+WITH daily AS (
+  SELECT CAST({_DAYNO[d.name]} AS BIGINT) AS day,
+         CAST(SUM({_CENTS}) AS DECIMAL(38,0)) AS y
+  FROM {orders} GROUP BY 1
+),
 tot AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(y) AS DECIMAL(38,0)) AS s
   FROM daily
@@ -123,40 +111,25 @@ CROSS JOIN tot t
     tags=("analytics", "timeseries", "changepoint"),
 )
 def binary_segmentation_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_bs_o")
-    daily = materialize_once(
-        spark,
-        _binseg_daily_sql(SPARK, "sales_telegram_bot_data_pipeline_bs_o"),
-        "bs_daily",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _binseg_sql(SPARK, "sales_telegram_bot_data_pipeline_bs_o", daily_rel=daily)
-    )
+    return spark.sql(_binseg_sql(SPARK, "sales_telegram_bot_data_pipeline_bs_o"))
 
 
 # --------------------------------------------------------------------------
 # entropy rate of the event-type Markov chain
 # --------------------------------------------------------------------------
-def _entropy_rate_sql(d: Dialect, events: str, trans_rel: str | None = None) -> str:
-    trans = (
-        f"SELECT from_type AS i, to_type AS j, n AS c FROM {trans_rel}"
-        if trans_rel
-        else f"""
-  WITH seq AS (
-    SELECT user_id, event_type,
-           LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-             AS next_type
-    FROM {events}
-  )
+def _entropy_rate_sql(d: Dialect, events: str) -> str:
+    return f"""
+WITH seq AS (
+  SELECT user_id, event_type,
+         LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+           AS next_type
+  FROM {events}
+),
+trans AS (
   SELECT event_type AS i, next_type AS j, CAST(COUNT(*) AS BIGINT) AS c
   FROM seq WHERE next_type IS NOT NULL GROUP BY 1, 2
-"""
-    )
-    return f"""
-WITH trans AS ({trans}),
+),
 ri AS (SELECT i, CAST(SUM(c) AS BIGINT) AS ci FROM trans GROUP BY i),
 tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM trans),
 -- conditional-entropy terms -p(i,j) ln p(j|i) and marginal terms
@@ -201,21 +174,8 @@ FROM tot t CROSS JOIN agg a
     tags=("analytics", "markov", "stats"),
 )
 def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-    from .analytics import _markov_trans_sql
-
     load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_er_ev")
-    # Materialize the bounded transition grid once (guide §3.3; shares
-    # the stationary-distribution builder — columns aliased i/j/c here).
-    trans = materialize_once(
-        spark,
-        _markov_trans_sql("sales_telegram_bot_data_pipeline_er_ev"),
-        "er_trans",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _entropy_rate_sql(SPARK, "sales_telegram_bot_data_pipeline_er_ev", trans_rel=trans)
-    )
+    return spark.sql(_entropy_rate_sql(SPARK, "sales_telegram_bot_data_pipeline_er_ev"))
 
 
 # --------------------------------------------------------------------------

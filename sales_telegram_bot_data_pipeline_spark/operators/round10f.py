@@ -32,11 +32,11 @@ from .curation import _doc_view
 # --------------------------------------------------------------------------
 # common-language effect size (Vargha-Delaney A)
 # --------------------------------------------------------------------------
-def _cles_sql(d: Dialect, table: str, cells_rel: str | None = None) -> str:
+def _cles_sql(d: Dialect, table: str) -> str:
     from .round10d import _src2_head_sql
 
     return f"""
-WITH {_src2_head_sql(d, table, cells_rel)},
+WITH {_src2_head_sql(d, table)},
 na AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM ga),
 nb AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM gb),
 -- win/tie pair mass on the bounded |V|x|V| grid: exact integers; the
@@ -74,17 +74,8 @@ FROM na n1 CROSS JOIN nb n2 CROSS JOIN u
     tags=("analytics", "stats", "agg"),
 )
 def cles_effect_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-    from .round10d import _src2_cells_sql
-
     view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_cl_docs")
-    # Materialize the side-tagged two-source value grid once (guide §3.3):
-    # na/nb/u plus the lo/hi scalar subqueries expanded it into 20 static
-    # corpus scans per statement.
-    cells = materialize_once(
-        spark, _src2_cells_sql(SPARK, view), "cl_cells", key=sf_dir
-    )
-    return spark.sql(_cles_sql(SPARK, view, cells_rel=cells))
+    return spark.sql(_cles_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------

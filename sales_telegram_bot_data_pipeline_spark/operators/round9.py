@@ -258,39 +258,7 @@ def did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
 ISO_BINS = 10
 
 
-def _isotonic_pre_sql(d: Dialect, orders: str) -> str:
-    """The K-row binned prefix-sum relation — the head every tail CTE of
-    the minimax isotonic fit references (iv/inner_min/final expanded it
-    into 16 static corpus scans per statement, guide §3.3)."""
-    return f"""
-WITH base AS (
-  SELECT CAST({_EPOCH_DIFF[d.name]} AS BIGINT) AS day_x,
-         CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y
-  FROM {orders}
-),
-bounds AS (SELECT MIN(day_x) AS lo, MAX(day_x) AS hi FROM base),
-binned AS (
-  -- recency bin: 0 = oldest ... K-1 = newest; equi-width on the day axis
-  -- (dialect idiv: bare CAST(x/y AS INT) truncates on Spark but ROUNDS
-  -- on DuckDB — the round-3 drift class)
-  SELECT CAST(LEAST({ISO_BINS} - 1,
-               {d.idiv(f"({ISO_BINS} * (b.day_x - t.lo))", "(t.hi - t.lo + 1)")})
-              AS INT) AS bin,
-         CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(y) AS BIGINT) AS s
-  FROM base b CROSS JOIN bounds t
-  WHERE t.hi > t.lo
-  GROUP BY 1
-)
--- K-row prefix sums (window over the bounded bin relation)
-SELECT bin, n, s,
-       CAST(SUM(n) OVER (ORDER BY bin) AS BIGINT) AS cn,
-       CAST(SUM(s) OVER (ORDER BY bin) AS BIGINT) AS cs
-FROM binned
-"""
-
-
-def _isotonic_sql(d: Dialect, orders: str, pre_rel: str | None = None) -> str:
+def _isotonic_sql(d: Dialect, orders: str) -> str:
     """Isotonic (non-decreasing) calibration of a binned empirical rate
     WITHOUT an iterative driver loop: over the K aggregated bins the
     isotonic-regression fit has the minimax closed form
@@ -310,13 +278,33 @@ def _isotonic_sql(d: Dialect, orders: str, pre_rel: str | None = None) -> str:
     joins (K=10 → at most 1000 combinations), exactly the bounded-model
     contract of the shapley coalition table.  Interval averages divide
     exact BIGINT prefix-sum differences; DOUBLE appears only there."""
-    pre = (
-        f"SELECT * FROM {pre_rel}"
-        if pre_rel
-        else _isotonic_pre_sql(d, orders)
-    )
     return f"""
-WITH pre AS ({pre}),
+WITH base AS (
+  SELECT CAST({_EPOCH_DIFF[d.name]} AS BIGINT) AS day_x,
+         CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y
+  FROM {orders}
+),
+bounds AS (SELECT MIN(day_x) AS lo, MAX(day_x) AS hi FROM base),
+binned AS (
+  -- recency bin: 0 = oldest ... K-1 = newest; equi-width on the day axis
+  -- (dialect idiv: bare CAST(x/y AS INT) truncates on Spark but ROUNDS
+  -- on DuckDB — the round-3 drift class)
+  SELECT CAST(LEAST({ISO_BINS} - 1,
+               {d.idiv(f"({ISO_BINS} * (b.day_x - t.lo))", "(t.hi - t.lo + 1)")})
+              AS INT) AS bin,
+         CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(y) AS BIGINT) AS s
+  FROM base b CROSS JOIN bounds t
+  WHERE t.hi > t.lo
+  GROUP BY 1
+),
+-- K-row prefix sums (window over the bounded bin relation)
+pre AS (
+  SELECT bin, n, s,
+         CAST(SUM(n) OVER (ORDER BY bin) AS BIGINT) AS cn,
+         CAST(SUM(s) OVER (ORDER BY bin) AS BIGINT) AS cs
+  FROM binned
+),
 iv AS (
   -- weighted interval averages avg(i..j): (K choose 2)+K rows
   SELECT i.bin AS i, j.bin AS j,
@@ -352,18 +340,8 @@ ORDER BY recency_bin
     tags=("evaluation", "calibration", "agg"),
 )
 def isotonic_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_iso_o")
-    pre = materialize_once(
-        spark,
-        _isotonic_pre_sql(SPARK, "sales_telegram_bot_data_pipeline_iso_o"),
-        "iso_pre",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _isotonic_sql(SPARK, "sales_telegram_bot_data_pipeline_iso_o", pre_rel=pre)
-    )
+    return spark.sql(_isotonic_sql(SPARK, "sales_telegram_bot_data_pipeline_iso_o"))
 
 
 # --------------------------------------------------------------------------
@@ -757,7 +735,7 @@ def bradley_terry_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # two-sample Kolmogorov-Smirnov over source pairs
 # --------------------------------------------------------------------------
-def _ks_sql(d: Dialect, docs: str, vals_rel: str | None = None) -> str:
+def _ks_sql(d: Dialect, docs: str) -> str:
     """Exact two-sample KS statistic D = max_x |F_a(x) - F_b(x)| for every
     source pair, over the document-length (n_chars) distributions — the
     distribution-shift detector between corpus slices (the nonparametric
@@ -773,16 +751,11 @@ def _ks_sql(d: Dialect, docs: str, vals_rel: str | None = None) -> str:
     pair OVER THE AGGREGATED VALUE AXIS (bounded per-pair row count by
     construction — the zipf_fit_audit contract, never a corpus window).
     Window SUM returns are cast back to BIGINT (DuckDB HUGEINT trap)."""
-    vals = (
-        f"SELECT * FROM {vals_rel}"
-        if vals_rel
-        else f"""
+    return f"""
+WITH vals AS (
   SELECT source, CAST(n_chars AS BIGINT) AS v, CAST(COUNT(*) AS BIGINT) AS c
   FROM {docs} GROUP BY 1, 2
-"""
-    )
-    return f"""
-WITH vals AS ({vals}),
+),
 tot AS (SELECT source, CAST(SUM(c) AS BIGINT) AS n FROM vals GROUP BY 1),
 prs AS (
   SELECT a.source AS sa, b.source AS sb
@@ -846,19 +819,8 @@ ORDER BY source_a, source_b
     tags=("evaluation", "stats", "text"),
 )
 def ks_two_sample_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ks_d")
-    # Materialize the bounded (source x value) grid once (guide §3.3):
-    # tot/merged expanded it into 16 static corpus scans per statement.
-    vals = materialize_once(
-        spark,
-        "SELECT source, CAST(n_chars AS BIGINT) AS v, CAST(COUNT(*) AS BIGINT) AS c\n"
-        "FROM sales_telegram_bot_data_pipeline_ks_d GROUP BY 1, 2",
-        "ks_vals",
-        key=sf_dir,
-    )
-    return spark.sql(_ks_sql(SPARK, "sales_telegram_bot_data_pipeline_ks_d", vals_rel=vals))
+    return spark.sql(_ks_sql(SPARK, "sales_telegram_bot_data_pipeline_ks_d"))
 
 
 # --------------------------------------------------------------------------

@@ -204,45 +204,7 @@ def cochran_q_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
 _C_BINS = 16
 
 
-def _cindex_cohort_sql(d: Dialect, orders: str, customer: str) -> str:
-    """The per-customer (ck, t, ev, bal) cohort — the shared base every
-    tail CTE of the c-index references; split out so the Spark side can
-    materialize it once per call (guide §3.3) while the oracle keeps the
-    single-statement form."""
-    dd_event = (
-        "datediff(s.d2, s.d1)" if d.name == "spark"
-        else "datediff('day', s.d1, s.d2)"
-    )
-    dd_censor = (
-        "datediff(h.hmax, s.d1)" if d.name == "spark"
-        else "datediff('day', s.d1, h.hmax)"
-    )
-    return f"""
-  WITH base AS (
-    SELECT o_custkey AS ck, MIN(CAST(o_orderdate AS DATE)) AS d1
-    FROM {orders} GROUP BY o_custkey
-  ),
-  seconds AS (
-    SELECT o.o_custkey AS ck,
-           MIN(CASE WHEN CAST(o.o_orderdate AS DATE) > f.d1
-                    THEN CAST(o.o_orderdate AS DATE) END) AS d2,
-           MAX(f.d1) AS d1
-    FROM {orders} o JOIN base f ON f.ck = o.o_custkey
-    GROUP BY o.o_custkey
-  ),
-  horizon AS (SELECT MAX(CAST(o_orderdate AS DATE)) AS hmax FROM {orders})
-  SELECT s.ck,
-         CAST(CASE WHEN s.d2 IS NOT NULL THEN {dd_event}
-              ELSE {dd_censor}
-              END AS BIGINT) AS t,
-         CASE WHEN s.d2 IS NOT NULL THEN 1 ELSE 0 END AS ev,
-         CAST(CAST(c.c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS bal
-  FROM seconds s CROSS JOIN horizon h
-  JOIN {customer} c ON c.c_custkey = s.ck
-"""
-
-
-def _cindex_sql(d: Dialect, orders: str, customer: str, cohort_rel: str | None = None) -> str:
+def _cindex_sql(d: Dialect, orders: str, customer: str) -> str:
     """Concordance index of a 16-bin account-balance risk score against
     days-to-repurchase with right censoring.  Comparable pairs: i an
     EVENT with t_i < t_j (j event or censored); concordant when the
@@ -257,9 +219,38 @@ def _cindex_sql(d: Dialect, orders: str, customer: str, cohort_rel: str | None =
     t over the {_C_BINS}-bin axis — both on the aggregated grid
     (O(|distinct t| x {_C_BINS}) rows, bounded by the day domain).
     Pair masses are exact BIGINT products; ONE division at the end."""
-    cohort = cohort_rel or _cindex_cohort_sql(d, orders, customer)
+    dd_event = (
+        "datediff(s.d2, s.d1)" if d.name == "spark"
+        else "datediff('day', s.d1, s.d2)"
+    )
+    dd_censor = (
+        "datediff(h.hmax, s.d1)" if d.name == "spark"
+        else "datediff('day', s.d1, h.hmax)"
+    )
     return f"""
-WITH cohort AS ({cohort}),
+WITH base AS (
+  SELECT o_custkey AS ck, MIN(CAST(o_orderdate AS DATE)) AS d1
+  FROM {orders} GROUP BY o_custkey
+),
+seconds AS (
+  SELECT o.o_custkey AS ck,
+         MIN(CASE WHEN CAST(o.o_orderdate AS DATE) > f.d1
+                  THEN CAST(o.o_orderdate AS DATE) END) AS d2,
+         MAX(f.d1) AS d1
+  FROM {orders} o JOIN base f ON f.ck = o.o_custkey
+  GROUP BY o.o_custkey
+),
+horizon AS (SELECT MAX(CAST(o_orderdate AS DATE)) AS hmax FROM {orders}),
+cohort AS (
+  SELECT s.ck,
+         CAST(CASE WHEN s.d2 IS NOT NULL THEN {dd_event}
+              ELSE {dd_censor}
+              END AS BIGINT) AS t,
+         CASE WHEN s.d2 IS NOT NULL THEN 1 ELSE 0 END AS ev,
+         CAST(CAST(c.c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS bal
+  FROM seconds s CROSS JOIN horizon h
+  JOIN {customer} c ON c.c_custkey = s.ck
+),
 bounds AS (SELECT MIN(bal) AS lo, MAX(bal) AS hi FROM cohort),
 binned AS (
   SELECT co.t, co.ev,
@@ -340,29 +331,10 @@ FROM mass
     tags=("evaluation", "survival", "stats"),
 )
 def harrell_c_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ci_o")
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ci_c")
-    # Materialize the per-customer cohort once (guide §3.3): the dense-grid
-    # tail references it through bounds x binned x cells x taxis, and CTE
-    # inlining expanded that into 16 executed orders/customer scans per
-    # call.  The oracle keeps the single-statement form.
-    cohort = materialize_once(
-        spark,
-        _cindex_cohort_sql(
-            SPARK, "sales_telegram_bot_data_pipeline_ci_o", "sales_telegram_bot_data_pipeline_ci_c"
-        ),
-        "ci_cohort",
-        key=sf_dir,
-    )
     return spark.sql(
-        _cindex_sql(
-            SPARK,
-            "sales_telegram_bot_data_pipeline_ci_o",
-            "sales_telegram_bot_data_pipeline_ci_c",
-            cohort_rel=f"SELECT * FROM {cohort}",
-        )
+        _cindex_sql(SPARK, "sales_telegram_bot_data_pipeline_ci_o", "sales_telegram_bot_data_pipeline_ci_c")
     )
 
 

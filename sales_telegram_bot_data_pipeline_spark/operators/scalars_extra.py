@@ -1004,7 +1004,7 @@ JC_SAMPLE_MOD = 64  # key-synopsis sampling: keep keys with h(k) % MOD == 0
 SKEW_FACTOR = 8  # skew flag: hottest key exceeds this multiple of the mean
 
 
-def _join_card_sql(d, a_rel: str | None = None, b_rel: str | None = None) -> str:
+def _join_card_sql(d) -> str:
     """Estimate |orders JOIN lineitem on orderkey| WITHOUT running the join
     -- the cardinality question an optimizer (AQE, join reordering,
     broadcast decisions) answers before committing to a plan -- with TWO
@@ -1026,13 +1026,8 @@ def _join_card_sql(d, a_rel: str | None = None, b_rel: str | None = None) -> str
     raw rows; the sketch is O(D*W) fixed state; the synopsis is |keys|/MOD
     rows; the exact side is the aggregated key-count equi-join (the
     identity sum_k cnt_a(k)*cnt_b(k)), not the materialized join.  Integer
-    arithmetic end-to-end.
-
-    ``a_rel``/``b_rel`` (Spark side): materialized per-key count views —
-    each kc was referenced 3x (sketch explode, exact join, sample join),
-    re-running the fact aggregation per reference (guide §3.3); with the
-    views the exact and sample sums also FUSE into one key join (the
-    sample is a CASE filter of the same matched pairs)."""
+    arithmetic end-to-end.  The exact and sampled sums fuse into one key
+    join: the sample is a CASE filter of the same matched pairs."""
     from ..functions.dialect import DUCKDB as _DD
     from ..functions.dialect import SPARK as _SS
 
@@ -1052,49 +1047,9 @@ def _join_card_sql(d, a_rel: str | None = None, b_rel: str | None = None) -> str
             f"FROM {alias}_ex GROUP BY i, ({h}) % {JC_W})"
         )
 
-    a_kc = (
-        f"SELECT k, n FROM {a_rel}"
-        if a_rel
-        else "SELECT o_orderkey AS k, COUNT(*) AS n FROM {orders} GROUP BY o_orderkey"
-    )
-    b_kc = (
-        f"SELECT k, n FROM {b_rel}"
-        if b_rel
-        else "SELECT l_orderkey AS k, COUNT(*) AS n FROM {lineitem} GROUP BY l_orderkey"
-    )
-    a = coords(a_kc, "a")
-    b = coords(b_kc, "b")
+    a = coords("SELECT o_orderkey AS k, COUNT(*) AS n FROM {orders} GROUP BY o_orderkey", "a")
+    b = coords("SELECT l_orderkey AS k, COUNT(*) AS n FROM {lineitem} GROUP BY l_orderkey", "b")
     hk = dd.md5_prefix_int(f"CAST(a_kc.k AS {S})")
-    if a_rel and b_rel:
-        exact_samp = f"""exact AS (
-  SELECT COALESCE(SUM(a_kc.n * b_kc.n), 0) AS exact_size,
-         COALESCE(SUM(CASE WHEN ({hk}) % {JC_SAMPLE_MOD} = 0
-                           THEN a_kc.n * b_kc.n END), 0)
-           * {JC_SAMPLE_MOD} AS sample_estimate
-  FROM a_kc JOIN b_kc ON b_kc.k = a_kc.k
-)"""
-        tail = """SELECT CAST(x.exact_size AS BIGINT) AS exact_join_size,
-       CAST(be.cms_estimate AS BIGINT) AS cms_estimate,
-       CAST(ROUND((be.cms_estimate - x.exact_size) * 1.0e0 / NULLIF(x.exact_size, 0), 6) AS DOUBLE) AS cms_rel_error,
-       CAST(x.sample_estimate AS BIGINT) AS sample_estimate,
-       CAST(ROUND((x.sample_estimate - x.exact_size) * 1.0e0 / NULLIF(x.exact_size, 0), 6) AS DOUBLE) AS sample_rel_error
-FROM exact x CROSS JOIN best be"""
-    else:
-        exact_samp = f"""exact AS (
-  SELECT COALESCE(SUM(a_kc.n * b_kc.n), 0) AS exact_size
-  FROM a_kc JOIN b_kc ON b_kc.k = a_kc.k
-),
-samp AS (
-  SELECT COALESCE(SUM(a_kc.n * b_kc.n), 0) * {JC_SAMPLE_MOD} AS sample_estimate
-  FROM a_kc JOIN b_kc ON b_kc.k = a_kc.k
-  WHERE ({hk}) % {JC_SAMPLE_MOD} = 0
-)"""
-        tail = """SELECT CAST(x.exact_size AS BIGINT) AS exact_join_size,
-       CAST(be.cms_estimate AS BIGINT) AS cms_estimate,
-       CAST(ROUND((be.cms_estimate - x.exact_size) * 1.0e0 / NULLIF(x.exact_size, 0), 6) AS DOUBLE) AS cms_rel_error,
-       CAST(sp.sample_estimate AS BIGINT) AS sample_estimate,
-       CAST(ROUND((sp.sample_estimate - x.exact_size) * 1.0e0 / NULLIF(x.exact_size, 0), 6) AS DOUBLE) AS sample_rel_error
-FROM exact x CROSS JOIN best be CROSS JOIN samp sp"""
     return f"""
 WITH {a},
 {b},
@@ -1104,8 +1059,19 @@ est AS (
   GROUP BY ask.i
 ),
 best AS (SELECT MIN(e) AS cms_estimate FROM est),
-{exact_samp}
-{tail}
+exact AS (
+  SELECT COALESCE(SUM(a_kc.n * b_kc.n), 0) AS exact_size,
+         COALESCE(SUM(CASE WHEN ({hk}) % {JC_SAMPLE_MOD} = 0
+                           THEN a_kc.n * b_kc.n END), 0)
+           * {JC_SAMPLE_MOD} AS sample_estimate
+  FROM a_kc JOIN b_kc ON b_kc.k = a_kc.k
+)
+SELECT CAST(x.exact_size AS BIGINT) AS exact_join_size,
+       CAST(be.cms_estimate AS BIGINT) AS cms_estimate,
+       CAST(ROUND((be.cms_estimate - x.exact_size) * 1.0e0 / NULLIF(x.exact_size, 0), 6) AS DOUBLE) AS cms_rel_error,
+       CAST(x.sample_estimate AS BIGINT) AS sample_estimate,
+       CAST(ROUND((x.sample_estimate - x.exact_size) * 1.0e0 / NULLIF(x.exact_size, 0), 6) AS DOUBLE) AS sample_rel_error
+FROM exact x CROSS JOIN best be
 """
 
 
@@ -1123,31 +1089,14 @@ best AS (SELECT MIN(e) AS cms_estimate FROM est),
     tags=("stats", "sketch", "join"),
 )
 def join_cardinality_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_jc_ord")
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_jc_li")
-    # Materialize each per-key count relation once (guide §3.3): the
-    # sketch explode, exact join and sample join each re-ran the fact
-    # aggregation (12 static scans per statement); the views also let the
-    # exact and sample sums fuse into one key join.  (k, n) pairs are
-    # narrow but corpus-proportional — see OPTIMIZATION_r14.md on the
-    # localCheckpoint vs reliable-checkpoint trade at 100 TB.
-    a_kc = materialize_once(
-        spark,
-        "SELECT o_orderkey AS k, COUNT(*) AS n "
-        "FROM sales_telegram_bot_data_pipeline_jc_ord GROUP BY o_orderkey",
-        "jc_a",
-        key=sf_dir,
+    return spark.sql(
+        _join_card_sql("spark").format(
+            orders="sales_telegram_bot_data_pipeline_jc_ord",
+            lineitem="sales_telegram_bot_data_pipeline_jc_li",
+        )
     )
-    b_kc = materialize_once(
-        spark,
-        "SELECT l_orderkey AS k, COUNT(*) AS n "
-        "FROM sales_telegram_bot_data_pipeline_jc_li GROUP BY l_orderkey",
-        "jc_b",
-        key=sf_dir,
-    )
-    return spark.sql(_join_card_sql("spark", a_rel=a_kc, b_rel=b_kc))
 
 
 # ---------------------------------------------------------------------------

@@ -480,8 +480,6 @@ def _kmeans_sql(
     table: str,
     units_rel: str | None = None,
     final: str = "centroids",
-    vnorm_rel: str | None = None,
-    score_last_rel: str | None = None,
 ) -> str:
     """K-means over the embedding corpus: the frozen IVF pseudo-centroids
     are the init, then KMEANS_ITERS Lloyd rounds of (assign to nearest
@@ -510,11 +508,6 @@ def _kmeans_sql(
     mean_units = d.idiv(
         "(SUM(uval) + 1000000000 * COUNT(*) + 5 * COUNT(*))", "(10 * COUNT(*))"
     )
-    vnorm_body = (
-        f"SELECT vec_id, vn FROM {vnorm_rel}"
-        if vnorm_rel
-        else "SELECT vec_id, SUM(uval * uval) AS vn FROM units GROUP BY vec_id"
-    )
 
     def assign_cte(i: int) -> str:
         return f"""assign{i} AS (
@@ -534,49 +527,26 @@ def _kmeans_sql(
 )"""
 
     last = KMEANS_ITERS
-    if score_last_rel is not None:
-        # the Lloyd chain was materialized once by the caller (guide §3.3:
-        # the silhouette/centroid tails reference score/assign{last}
-        # 2-5x, and CTE inlining re-ran the WHOLE unrolled chain per
-        # reference — 76 static Exchanges in one statement); pick up from
-        # the checkpointed last-round scores
-        ctes = []
-        if vnorm_rel is None or final == "centroids":
-            ctes.append(f"units AS ({units_rel or units})")
-        ctes += [
-            f"vnorm AS ({vnorm_body})",
-            f"score{last} AS (SELECT vec_id, cid, dot, cn FROM {score_last_rel})",
-            assign_cte(last),
-        ]
-        if final == "centroids":
-            ctes.append(mean_cte(last))
-    else:
-        ctes = [
-            f"units AS ({units_rel or units})",
-            f"vnorm AS ({vnorm_body})",
-            # init: the frozen pseudo-centroids' own units (scale differs from
-            # later means; cosine is scale-invariant so that is immaterial)
-            f"c0 AS (SELECT vec_id - {CENTROID_BASE} AS cid, pos, uval AS cmean FROM units "
-            f"WHERE vec_id >= {CENTROID_BASE} AND vec_id < {CENTROID_BASE + K_LISTS})",
-        ]
-        for i in range(1, KMEANS_ITERS + 1):
-            prev = f"c{i - 1}"
-            ctes.append(
-                f"""score{i} AS (
+    ctes = [
+        f"units AS ({units_rel or units})",
+        "vnorm AS (SELECT vec_id, SUM(uval * uval) AS vn FROM units GROUP BY vec_id)",
+        # init: the frozen pseudo-centroids' own units (scale differs from
+        # later means; cosine is scale-invariant so that is immaterial)
+        f"c0 AS (SELECT vec_id - {CENTROID_BASE} AS cid, pos, uval AS cmean FROM units "
+        f"WHERE vec_id >= {CENTROID_BASE} AND vec_id < {CENTROID_BASE + K_LISTS})",
+    ]
+    for i in range(1, KMEANS_ITERS + 1):
+        prev = f"c{i - 1}"
+        ctes.append(
+            f"""score{i} AS (
   SELECT u.vec_id, c.cid,
          SUM(u.uval * c.cmean) AS dot, SUM(c.cmean * c.cmean) AS cn
   FROM units u JOIN {prev} c ON c.pos = u.pos
   GROUP BY u.vec_id, c.cid
 )"""
-            )
-            ctes.append(assign_cte(i))
-            ctes.append(mean_cte(i))
-    if final == "score_last":
-        # build mode for the Spark side's one-shot chain materialization
-        return f"""
-WITH {','.join(ctes)}
-SELECT vec_id, cid, dot, cn FROM score{last}
-"""
+        )
+        ctes.append(assign_cte(i))
+        ctes.append(mean_cte(i))
     if final == "silhouette":
         # centroid-margin separation from the LAST round's relations (all
         # already in CTE scope — no second Lloyd chain): per vector, cosine
@@ -640,41 +610,7 @@ ORDER BY c.cid, pos
     tags=("similarity", "ivf", "iterative"),
 )
 def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The unit-triple explode feeds every iteration's scoring AND mean
-    # recomputation (2 references per Lloyd round, plus vnorm and the init
-    # slice).  Materialize it once: Catalyst inlines CTEs, and with the
-    # CTE chain growing per iteration the re-derived explode dominates.
-    # vnorm and the last-round score relation likewise materialize once
-    # (guide §3.3): vnorm re-aggregated units per iteration, and the
-    # centroid tail's two assign{last} references re-ran the WHOLE chain
-    # (38 static Exchanges per statement).
-    from ..session import materialize_once
-
-    view = _emb_view(spark, sf_dir)
-    units_rel = "SELECT vec_id, pos, uval FROM " + materialize_once(
-        spark, _units_sql(SPARK, view), "kmeans_units", key=sf_dir
-    )
-    vnorm = materialize_once(
-        spark,
-        f"SELECT vec_id, SUM(uval * uval) AS vn FROM ({units_rel}) u GROUP BY vec_id",
-        "kmeans_vnorm",
-        key=sf_dir,
-    )
-    score_last = materialize_once(
-        spark,
-        _kmeans_sql(SPARK, view, units_rel=units_rel, vnorm_rel=vnorm, final="score_last"),
-        "kmeans_score",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _kmeans_sql(
-            SPARK,
-            view,
-            units_rel=units_rel,
-            vnorm_rel=vnorm,
-            score_last_rel=score_last,
-        )
-    )
+    return spark.sql(_kmeans_sql(SPARK, _emb_view(spark, sf_dir)))
 
 
 @register(
@@ -692,39 +628,7 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "clustering", "audit"),
 )
 def kmeans_separation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Same per-call materialization ladder as kmeans_lloyd (guide §3.3):
-    # the silhouette tail references score{last} 3x and assign{last} 3x
-    # (via lab/cos6/own/other/margin), and CTE inlining re-ran the whole
-    # unrolled Lloyd chain per reference — 76 static Exchanges for one
-    # statement.
-    from ..session import materialize_once
-
-    view = _emb_view(spark, sf_dir)
-    units_rel = "SELECT vec_id, pos, uval FROM " + materialize_once(
-        spark, _units_sql(SPARK, view), "sil_units", key=sf_dir
-    )
-    vnorm = materialize_once(
-        spark,
-        f"SELECT vec_id, SUM(uval * uval) AS vn FROM ({units_rel}) u GROUP BY vec_id",
-        "sil_vnorm",
-        key=sf_dir,
-    )
-    score_last = materialize_once(
-        spark,
-        _kmeans_sql(SPARK, view, units_rel=units_rel, vnorm_rel=vnorm, final="score_last"),
-        "sil_score",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _kmeans_sql(
-            SPARK,
-            view,
-            units_rel=units_rel,
-            vnorm_rel=vnorm,
-            score_last_rel=score_last,
-            final="silhouette",
-        )
-    )
+    return spark.sql(_kmeans_sql(SPARK, _emb_view(spark, sf_dir), final="silhouette"))
 
 
 def _pair_sim_sql(d: Dialect, table: str) -> str:
@@ -1578,32 +1482,7 @@ def _pq_cb_sql(d: Dialect, table: str) -> str:
     )
 
 
-def _pq_codes_sql(d: Dialect, table: str) -> str:
-    """Standalone PQ encode pass (vec_id, code0..code{PQ_M-1}) with the
-    codebook embedded — the relation knn_cosine_pq materializes once per
-    call (guide §3.3: CTE inlining re-ran this corpus x codebook argmin
-    once per subspace union leg of codes_long)."""
-    if d.name == "spark":
-        code_cols = ", ".join(
-            f"min(named_struct('d', {_subl2(d, 'v.embedding', 'cb.embedding', m)}, "
-            f"'cid', cb.cid)).cid AS code{m}"
-            for m in range(PQ_M)
-        )
-    else:
-        code_cols = ", ".join(
-            f"(min({{'d': {_subl2(d, 'v.embedding', 'cb.embedding', m)}, "
-            f"'cid': cb.cid}})).cid AS code{m}"
-            for m in range(PQ_M)
-        )
-    return f"""
-  WITH cb AS ({_pq_cb_sql(d, table)})
-  SELECT v.vec_id, {code_cols}
-  FROM {table} v JOIN cb ON 1=1
-  GROUP BY v.vec_id
-"""
-
-
-def _pq_sql(d: Dialect, table: str, codes_rel: str | None = None) -> str:
+def _pq_sql(d: Dialect, table: str) -> str:
     """PQ-ADC top-k: m per-subspace codebooks of frozen corpus vectors
     (vec_id in [CENTROID_BASE, CENTROID_BASE+PQ_KC) — the same frozen-init
     discipline as the IVF centroids, so both engines build the identical
@@ -1624,6 +1503,19 @@ def _pq_sql(d: Dialect, table: str, codes_rel: str | None = None) -> str:
     candidate sets by construction (the double-summation order of a
     4-row SUM is not portable; integers are)."""
     cb = _pq_cb_sql(d, table)
+    # per-subspace argmin-L2 code over the broadcast codebook
+    if d.name == "spark":
+        code_cols = ", ".join(
+            f"min(named_struct('d', {_subl2(d, 'v.embedding', 'cb.embedding', m)}, "
+            f"'cid', cb.cid)).cid AS code{m}"
+            for m in range(PQ_M)
+        )
+    else:
+        code_cols = ", ".join(
+            f"(min({{'d': {_subl2(d, 'v.embedding', 'cb.embedding', m)}, "
+            f"'cid': cb.cid}})).cid AS code{m}"
+            for m in range(PQ_M)
+        )
     codes_long = " UNION ALL ".join(
         f"SELECT vec_id, {m} AS m, code{m} AS cid FROM codes" for m in range(PQ_M)
     )
@@ -1642,13 +1534,13 @@ def _pq_sql(d: Dialect, table: str, codes_rel: str | None = None) -> str:
         adc_p = "SELECT *, 0 AS pid FROM adc"
         pid_part = ""
     cos_qn = _cosine(d, "q.embedding", "n.embedding")
-    # codes_long references the encode pass once per subspace; a caller-
-    # supplied codes_rel (a materialized view) stops CTE inlining from
-    # re-running the corpus x codebook argmin PQ_M times (guide §3.3)
-    codes_cte = codes_rel or _pq_codes_sql(d, table)
     return f"""
 WITH cb AS ({cb}),
-codes AS ({codes_cte}),
+codes AS (
+  SELECT v.vec_id, {code_cols}
+  FROM {table} v JOIN cb ON 1=1
+  GROUP BY v.vec_id
+),
 codes_long AS ({codes_long}),
 lut AS ({lut}),
 adc AS (
@@ -1703,14 +1595,7 @@ ORDER BY query_id, rank
     tags=("similarity", "pq", "topk"),
 )
 def knn_cosine_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    view = _emb_view(spark, sf_dir)
-    # Materialize the PQ encode pass once per call (guide §3.3): CTE
-    # inlining re-ran the corpus x codebook argmin GROUP BY once per
-    # subspace union leg — 18 executed embedding scans per statement.
-    codes = materialize_once(spark, _pq_codes_sql(SPARK, view), "pq_codes", key=sf_dir)
-    return spark.sql(_pq_sql(SPARK, view, codes_rel=f"SELECT * FROM {codes}"))
+    return spark.sql(_pq_sql(SPARK, _emb_view(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------

@@ -57,26 +57,30 @@ def _rev() -> F.Column:
 # dim join (map-side combinable, one shuffle on (partkey, suppkey)); the
 # correlated MIN decorrelates to a per-part aggregate joined back.
 # ---------------------------------------------------------------------------
-_Q2_ELIGIBLE_SQL = """
+_Q2_PART_PRED = "p_size <= 10 AND p_type = 'SMALL'"
+
+# The semi-filter on the selective part predicate shrinks `eligible`
+# before both references read it; it cannot change the result, because
+# both references are keyed on the filtered part set.
+_Q2_SQL = """
 WITH supply AS (
   SELECT l_partkey AS partkey, l_suppkey AS suppkey,
          MIN(CAST(l_extendedprice AS DECIMAL(12,2))) AS supplycost
   FROM {lineitem} GROUP BY l_partkey, l_suppkey
+),
+eligible AS (
+  SELECT sp.partkey, sp.suppkey, sp.supplycost, s.s_name, s.s_acctbal, n.n_name
+  FROM supply sp
+  JOIN {supplier} s ON s.s_suppkey = sp.suppkey
+  JOIN {nation} n ON n.n_nationkey = s.s_nationkey
+  JOIN {region} r ON r.r_regionkey = n.n_regionkey
+  WHERE r.r_name = 'EUROPE'
+    AND sp.partkey IN (SELECT p_partkey FROM {part} WHERE {part_pred})
 )
-SELECT sp.partkey, sp.suppkey, sp.supplycost, s.s_name, s.s_acctbal, n.n_name
-FROM supply sp
-JOIN {supplier} s ON s.s_suppkey = sp.suppkey
-JOIN {nation} n ON n.n_nationkey = s.s_nationkey
-JOIN {region} r ON r.r_regionkey = n.n_regionkey
-WHERE r.r_name = 'EUROPE'
-"""
-
-_Q2_SQL = """
-WITH eligible AS ({eligible})
 SELECT e.s_acctbal, e.s_name, e.n_name, p.p_partkey, p.p_name,
        CAST(e.supplycost AS DOUBLE) AS supplycost
 FROM {part} p JOIN eligible e ON p.p_partkey = e.partkey
-WHERE p.p_size <= 10 AND p.p_type = 'SMALL'
+WHERE {part_pred}
   AND e.supplycost = (SELECT MIN(e2.supplycost) FROM eligible e2
                       WHERE e2.partkey = p.p_partkey)
 ORDER BY e.s_acctbal DESC, e.n_name, e.s_name, p.p_partkey
@@ -97,11 +101,8 @@ def _views(spark: SparkSession, sf_dir: str, tables: list[str]) -> dict[str, str
 @register(
     "q2_min_cost_supplier",
     oracle=_Q2_SQL.format(
-        eligible=_Q2_ELIGIBLE_SQL.format(
-            lineitem="lineitem", supplier="supplier", nation="nation",
-            region="region",
-        ),
-        part="part",
+        lineitem="lineitem", supplier="supplier", nation="nation",
+        region="region", part="part", part_pred=_Q2_PART_PRED,
     ),
     doc="TPC-H Q2 shape: correlated scalar MIN subquery over an "
     "eligible-supplier relation referenced twice (Catalyst decorrelates "
@@ -110,28 +111,8 @@ def _views(spark: SparkSession, sf_dir: str, tables: list[str]) -> dict[str, str
     tags=("relational", "subquery", "tpch"),
 )
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
     v = _views(spark, sf_dir, ["lineitem", "supplier", "nation", "region", "part"])
-    # Materialize the eligible (part, supplier, cost) relation once,
-    # pre-filtered to qualifying parts (guide §3.2/§3.3): the correlated
-    # scalar MIN referenced `eligible` twice, re-running the lineitem
-    # aggregate + 3-dim join per reference; the semi-filter on the
-    # selective part predicate shrinks the checkpoint at any scale and
-    # cannot change the result — both references are keyed on the
-    # filtered part set.  The oracle keeps the unfiltered two-reference
-    # form.
-    eligible = materialize_once(
-        spark,
-        _Q2_ELIGIBLE_SQL.format(**v)
-        + f""" AND sp.partkey IN (SELECT p_partkey FROM {v['part']}
-                        WHERE p_size <= 10 AND p_type = 'SMALL')""",
-        "q2_elig",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _Q2_SQL.format(eligible=f"SELECT * FROM {eligible}", part=v["part"])
-    )
+    return spark.sql(_Q2_SQL.format(**v, part_pred=_Q2_PART_PRED))
 
 
 # ---------------------------------------------------------------------------

@@ -10,172 +10,47 @@ from .registry import REGISTRY, Query  # noqa: F401
 
 # Import order = SURVEY.md §7 milestone order; each import registers queries.
 from .operators import relational  # noqa: F401, E402
-
-try:
-    from .operators import tpch_extra  # noqa: F401  (TPC-H completion suite)
-except ImportError:  # pragma: no cover
-    pass
-
-try:  # modules added milestone by milestone
-    from .operators import temporal  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .functions import prices as _prices_queries  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import textops  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import dedup  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import similarity  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import segmentation  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import inference  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import pipeline_native  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import preferences  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import scalars_extra  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import curation  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import retrieval  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import lm_quality  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import tokenizer  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .sources import binary  # noqa: F401  (multimodal_features)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .streaming import revalidate  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .streaming import windows as _streaming_windows  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import scale  # noqa: F401  (scd2_dimension_update)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import linkage  # noqa: F401  (symspell, PIT join)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import blocklist  # noqa: F401  (Aho-Corasick scan)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .sources import kvstream  # noqa: F401  (streaming DataSource)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .sources import jsonl  # noqa: F401  (JSONL corpus source)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .streaming import stateful as _streaming_stateful  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .sources import csvsrc  # noqa: F401  (CSV corpus source)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .sources import layout  # noqa: F401  (ORC + partition-pruned layout)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import analytics  # noqa: F401  (assoc rules, RFM, chi2, ...)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import evaluation  # noqa: F401  (AUC, Welch, skyline, KM)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import round8  # noqa: F401  (EWMA, seasonal, runs, JL, ...)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import round9  # noqa: F401  (CUPED, DiD, isotonic, ...)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import round9b  # noqa: F401  (BH-FDR, McNemar, hashing)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import round9c  # noqa: F401  (EVT, stump, JS, PR-AUC, RBO)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import round9d  # noqa: F401  (NA hazard, Cochran Q, C-index)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import round9e  # noqa: F401  (nDCG, modularity, ADF)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import round10  # noqa: F401  (Levene, Hill, Theil, ...)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import round10b  # noqa: F401  (Gumbel, Friedman, Katz)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .sources import arrowipc  # noqa: F401  (Arrow IPC corpus source)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import round10c  # noqa: F401  (Qini, SPRT, BetaBin)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import round10d  # noqa: F401  (KW, HL, CA, MH)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import round10e  # noqa: F401  (binseg, H-rate, CvM)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from .operators import round10f  # noqa: F401  (CLES, Hellinger, ECE)
-except ImportError:  # pragma: no cover
-    pass
+from .operators import tpch_extra  # noqa: F401  (TPC-H completion suite)
+from .operators import temporal  # noqa: F401
+from .functions import prices as _prices_queries  # noqa: F401
+from .operators import textops  # noqa: F401
+from .operators import dedup  # noqa: F401
+from .operators import similarity  # noqa: F401
+from .operators import segmentation  # noqa: F401
+from .operators import inference  # noqa: F401
+from .operators import pipeline_native  # noqa: F401
+from .operators import preferences  # noqa: F401
+from .operators import scalars_extra  # noqa: F401
+from .operators import curation  # noqa: F401
+from .operators import retrieval  # noqa: F401
+from .operators import lm_quality  # noqa: F401
+from .operators import tokenizer  # noqa: F401
+from .sources import binary  # noqa: F401  (multimodal_features)
+from .streaming import revalidate  # noqa: F401
+from .streaming import windows as _streaming_windows  # noqa: F401
+from .operators import scale  # noqa: F401  (scd2_dimension_update)
+from .operators import linkage  # noqa: F401  (symspell, PIT join)
+from .operators import blocklist  # noqa: F401  (Aho-Corasick scan)
+from .sources import kvstream  # noqa: F401  (streaming DataSource)
+from .sources import jsonl  # noqa: F401  (JSONL corpus source)
+from .streaming import stateful as _streaming_stateful  # noqa: F401
+from .sources import csvsrc  # noqa: F401  (CSV corpus source)
+from .sources import layout  # noqa: F401  (ORC + partition-pruned layout)
+from .operators import analytics  # noqa: F401  (assoc rules, RFM, chi2, ...)
+from .operators import evaluation  # noqa: F401  (AUC, Welch, skyline, KM)
+from .operators import round8  # noqa: F401  (EWMA, seasonal, runs, JL, ...)
+from .operators import round9  # noqa: F401  (CUPED, DiD, isotonic, ...)
+from .operators import round9b  # noqa: F401  (BH-FDR, McNemar, hashing)
+from .operators import round9c  # noqa: F401  (EVT, stump, JS, PR-AUC, RBO)
+from .operators import round9d  # noqa: F401  (NA hazard, Cochran Q, C-index)
+from .operators import round9e  # noqa: F401  (nDCG, modularity, ADF)
+from .operators import round10  # noqa: F401  (Levene, Hill, Theil, ...)
+from .operators import round10b  # noqa: F401  (Gumbel, Friedman, Katz)
+from .sources import arrowipc  # noqa: F401  (Arrow IPC corpus source)
+from .operators import round10c  # noqa: F401  (Qini, SPRT, BetaBin)
+from .operators import round10d  # noqa: F401  (KW, HL, CA, MH)
+from .operators import round10e  # noqa: F401  (binseg, H-rate, CvM)
+from .operators import round10f  # noqa: F401  (CLES, Hellinger, ECE)
 
 
 # --------------------------------------------------------------------------

@@ -53,51 +53,31 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def materialize_once(
-    spark: SparkSession, sql_text: str, tag: str, key: str = "",
-    reliable: bool = False,
-) -> str:
-    """Per-CALL localCheckpoint of a subquery, returned as a temp-view
-    name (r13, guide §3.3).  Spark INLINES every multi-referenced CTE
-    (InlineCTE has no materialization path), so a query whose CTE chain
-    references a base relation k times re-executes — and re-SCANS — the
-    whole subtree k times; executed plans measured up to 38 parquet scans
-    for one statement.  Checkpointing the shared relation once per call
-    truncates every reference to a leaf.  NOT a stored session view: the
-    name is call-scoped and rebuilt on every invocation, so bench rows
-    keep paying the build (no cross-run reuse; the stored-view policy and
-    its allowlist are unaffected).
+def materialize_once(spark: SparkSession, sql_text: str, tag: str, key: str = "") -> str:
+    """``localCheckpoint`` ``sql_text`` once per call and return a temp-view
+    name that reads the checkpointed rows.
 
-    ``key`` (pass the sf_dir) namespaces the view name with a short md5,
-    the same discipline as every stored-view helper (ADVICE r13):
-    correctness never RELIES on the name (the checkpoint binds eagerly,
-    per call), but interleaved multi-sf sessions must not watch one
-    dataset's materialization appear under the other's name.
+    Spark inlines every CTE and already plans repeated subtrees as
+    ``ReusedExchange``/``ReusedSubquery``, so a checkpoint only adds an
+    eager action unless executed work says otherwise.  A call site stays
+    only where an interleaved same-session A/B at sf0.1 shows it pays: the
+    materialized form wins at least 9 of 10 pairs and its median wall time
+    is lower by more than the inline form's IQR.  The sites that meet the
+    rule, with their numbers, are the keep table in PERF_NOTES.md, and
+    ``tests/test_materialize_keep.py`` pins the call sites to it.  Every
+    other query runs the same SQL builder as its DuckDB oracle.
 
-    Scale note (VERDICT r13 item 7): ``localCheckpoint`` stores on
-    executors WITHOUT replication and truncates lineage, so a lost
-    executor fails the query instead of recomputing.  Every call site in
-    this repo materializes a BOUNDED relation (parameter grids, per-group
-    aggregates, banded pair sets — orders of magnitude below the corpus);
-    for corpus-sized shared relations pass ``reliable=True``, which uses
-    a RELIABLE ``checkpoint()`` (materialized to the checkpoint dir —
-    storage that survives executor loss) instead."""
+    The view is rebuilt on every call, so nothing is reused across calls.
+    ``key`` (pass the sf_dir) namespaces the view name with a short md5 so
+    interleaved multi-sf sessions never see one dataset's rows under the
+    other's name.  ``localCheckpoint`` keeps no replica and truncates the
+    lineage, so use it only for bounded relations (grids, per-group
+    aggregates, banded pair sets), never for corpus-sized ones."""
     import hashlib
-    import os
-    import tempfile
 
     suffix = f"_{hashlib.md5(key.encode()).hexdigest()[:8]}" if key else ""
     name = f"sales_telegram_bot_data_pipeline_mat_{tag}{suffix}"
-    df = spark.sql(sql_text)
-    if reliable:
-        if not spark.sparkContext.getCheckpointDir():
-            spark.sparkContext.setCheckpointDir(
-                os.path.join(tempfile.gettempdir(), "sales_telegram_bot_data_pipeline_ckpt")
-            )
-        df = df.checkpoint()
-    else:
-        df = df.localCheckpoint()
-    df.createOrReplaceTempView(name)
+    spark.sql(sql_text).localCheckpoint().createOrReplaceTempView(name)
     return name
 
 

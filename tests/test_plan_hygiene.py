@@ -214,10 +214,8 @@ _UNPARTITIONED_WINDOW_OK = {
     "DRIFT_BUCKETS equi-width grid (fixed bucket count)",
     "window_distribution_ranks": "input filtered to o_custkey < 30 — a "
     "fixed key subset, O(orders of 30 customers) rows by construction",
-    # isotonic_calibration_bins: its K-bin prefix-sum window (fixed
-    # ISO_BINS=10 rows) moved into the r14 materialize_once build — the
-    # main statement no longer plans an unpartitioned window, so the
-    # entry would be stale cover (this test enforces removal)
+    "isotonic_calibration_bins": "K-bin prefix-sum windows run on the "
+    "aggregated ISO_BINS=10-row bin relation, never the fact table",
     "bh_fdr_source_audit": "rank / COUNT(*) / step-up MAX windows all run "
     "on the aggregated per-source relation — O(|sources|) rows (~20); the "
     "corpus collapses in one map-side-combinable groupBy first",
