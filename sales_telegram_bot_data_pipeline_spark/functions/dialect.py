@@ -165,6 +165,23 @@ class Dialect:
             return f"({a} div {b})"
         return f"({a} // {b})"
 
+    # --- dates -----------------------------------------------------------
+    def days_since(self, x: str, origin: str = "1970-01-01") -> str:
+        """Whole days from the date literal ``origin`` to the date of ``x``."""
+        if self.name == "spark":
+            return f"datediff(to_date({x}), to_date('{origin}'))"
+        return f"datediff('day', DATE '{origin}', CAST({x} AS DATE))"
+
+    def extract(self, field: str, x: str) -> str:
+        """A timestamp field such as ``hour`` or ``minute``."""
+        if self.name == "spark":
+            return f"{field}({x})"
+        return f"EXTRACT({field} FROM {x})"
+
+    @property
+    def string_type(self) -> str:
+        return "STRING" if self.name == "spark" else "VARCHAR"
+
     # --- structs ---------------------------------------------------------
     def struct_lit(self, fields: dict[str, str]) -> str:
         """Named struct from {field: sql}.  Callers must type-align the

@@ -41,7 +41,7 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .dialect import DUCKDB, SPARK, Dialect
+from .dialect import SPARK, Dialect
 
 FIELDS = (
     "item_price",
@@ -442,13 +442,6 @@ def dispatcher_value_sql(d: Dialect, shop: str, x: str, cls: str) -> str:
     return "CASE " + " ".join(branches) + " END"
 
 
-def price_value_col(
-    shop: str = "shop_name", text: str = "ocr_text", cls: str = "class_id"
-) -> Column:
-    """DataFrame-API entry: the scalar per-row dispatched price value."""
-    return F.expr(dispatcher_value_sql(SPARK, shop, text, cls))
-
-
 # Shared-subexpression hoisting: every parser body re-derives the token
 # parse (``_parsed``) and/or the whole-string parse (``parse_price_sql``)
 # of the input text — ~60 textual copies across the 21-shop dispatcher,
@@ -612,33 +605,29 @@ def build_parse_price_query_sql(d: Dialect, part_table: str) -> str:
 
 
 # --- registry entries ------------------------------------------------------
-from ..registry import register  # noqa: E402
+from ..registry import register, register_sql  # noqa: E402
 from ..sources.tables import load_table  # noqa: E402
 
 
-@register(
+register_sql(
     "parse_price_core",
-    oracle=build_parse_price_query_sql(DUCKDB, "part"),
+    build_parse_price_query_sql,
+    ("part",),
     doc="Reference op 21 parse_price: strip/normalize separators + "
     "implied-cents rule, as a native expression over synthesized OCR text.",
     tags=("scalar", "prices"),
 )
-def parse_price_core(spark, sf_dir):
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("sales_telegram_bot_data_pipeline_part")
-    return spark.sql(build_parse_price_query_sql(SPARK, "sales_telegram_bot_data_pipeline_part"))
 
 
-@register(
+register_sql(
     "price_dispatcher_suite",
-    oracle=build_dispatcher_query_sql(DUCKDB, "part"),
+    build_dispatcher_query_sql,
+    ("part",),
     doc="Reference ops 22-40: all 17 shop parsers + class_id dispatcher over "
     "synthesized per-shop OCR samples, returning the normalized price struct "
     "as columns.",
     tags=("scalar", "prices", "dispatcher"),
 )
-def price_dispatcher_suite(spark, sf_dir):
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("sales_telegram_bot_data_pipeline_part")
-    return spark.sql(build_dispatcher_query_sql(SPARK, "sales_telegram_bot_data_pipeline_part"))
 
 
 # --------------------------------------------------------------------------

@@ -27,9 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.dialect import DUCKDB, SPARK
-from ..registry import register
-from ..sources.tables import load_table
+from ..functions.dialect import DUCKDB, Dialect
+from ..registry import register, register_sql
+from ..sources.tables import load_table, table_view
 
 # --------------------------------------------------------------------------
 # association rules over per-order brand baskets
@@ -80,8 +80,8 @@ ORDER BY brand_a, brand_b
     tags=("analytics", "association", "self-join"),
 )
 def association_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ar_l")
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ar_p")
+    lineitem = table_view(spark, sf_dir, "lineitem")
+    part = table_view(spark, sf_dir, "part")
     # Materialize the basket relation ONCE per call (guide §3.3): Spark
     # inlines the CTE into every consumer (tot, items, both self-join
     # sides), and the executed plan showed the lineitem-join-part subtree
@@ -92,7 +92,7 @@ def association_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CTEs) and its unchanged PASS is the equivalence proof.
     baskets = spark.sql(
         _ASSOC_BASKETS_SQL.format(
-            lineitem="sales_telegram_bot_data_pipeline_ar_l", part="sales_telegram_bot_data_pipeline_ar_p"
+            lineitem=lineitem, part=part
         )
     ).localCheckpoint()
     baskets.createOrReplaceTempView("sales_telegram_bot_data_pipeline_ar_baskets")
@@ -263,11 +263,10 @@ ORDER BY o.event_type, o.dow
 """
 
 
-@register(
+register_sql(
     "chi_squared_independence",
-    oracle=_chi2_sql(
-        "datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) % 7", "events"
-    ),
+    lambda d, events: _chi2_sql(f"{d.days_since('ts')} % 7", events),
+    ("events",),
     doc="Chi-squared independence contingency table of event_type x weekday "
     "(timezone-free epoch-day mod 7): observed counts, expected under "
     "independence, per-cell chi-squared contribution "
@@ -277,14 +276,6 @@ ORDER BY o.event_type, o.dow
     "bounded by |event_type| x 7.",
     tags=("analytics", "stats", "agg"),
 )
-def chi_squared_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_chi_ev")
-    return spark.sql(
-        _chi2_sql(
-            "datediff(to_date(ts), to_date('1970-01-01')) % 7",
-            "sales_telegram_bot_data_pipeline_chi_ev",
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -428,9 +419,10 @@ ORDER BY k_band
 """
 
 
-@register(
+register_sql(
     "k_anonymity_audit",
-    oracle=_KANON_SQL.format(customer="customer"),
+    lambda d, customer: _KANON_SQL.format(customer=customer),
+    ("customer",),
     doc=f"k-anonymity audit of a customer export under quasi-identifiers "
     "(nation, market segment, account-balance kilo-band): group-size "
     f"histogram capped at {K_BAND_CAP}+, with groups below k="
@@ -439,9 +431,6 @@ ORDER BY k_band
     "release pipeline runs before publishing.",
     tags=("analytics", "privacy", "audit"),
 )
-def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_kan_c")
-    return spark.sql(_KANON_SQL.format(customer="sales_telegram_bot_data_pipeline_kan_c"))
 
 
 # --------------------------------------------------------------------------
@@ -507,8 +496,8 @@ FROM pairs GROUP BY pri ORDER BY pri
     tags=("analytics", "join", "band"),
 )
 def band_join_price_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_bj_o")
-    return spark.sql(_BAND_JOIN_SPARK.format(orders="sales_telegram_bot_data_pipeline_bj_o"))
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_BAND_JOIN_SPARK.format(orders=orders))
 
 
 # --------------------------------------------------------------------------
@@ -548,12 +537,10 @@ FROM c
 """
 
 
-@register(
+register_sql(
     "revenue_trend_ols",
-    oracle=_OLS_SQL.format(
-        datediff="datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))",
-        orders="orders",
-    ),
+    lambda d, orders: _OLS_SQL.format(datediff=d.days_since("o_orderdate"), orders=orders),
+    ("orders",),
     doc="Closed-form OLS trend line over daily revenue: slope ($/day), "
     "intercept, R^2 from the five classic sums (Sx, Sy, Sxx, Syy, Sxy) — "
     "ONE aggregation pass over the bounded daily relation, every sum "
@@ -562,14 +549,6 @@ FROM c
     "'fit a regression without collecting anything': model state is O(1).",
     tags=("analytics", "stats", "regression"),
 )
-def revenue_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ols_o")
-    return spark.sql(
-        _OLS_SQL.format(
-            datediff="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-            orders="sales_telegram_bot_data_pipeline_ols_o",
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -603,9 +582,10 @@ ORDER BY digit
 """
 
 
-@register(
+register_sql(
     "benford_first_digit_audit",
-    oracle=_BENFORD_SQL.format(strtype="VARCHAR", orders="orders"),
+    lambda d, orders: _BENFORD_SQL.format(strtype=d.string_type, orders=orders),
+    ("orders",),
     doc="Benford's-law data-quality audit: first-significant-digit "
     "distribution of order totals vs the log10(1+1/d) expectation "
     "(inlined as literal constants — no libm in the comparison path), "
@@ -614,9 +594,6 @@ ORDER BY digit
     "domain plus a scalar total.",
     tags=("analytics", "audit", "stats"),
 )
-def benford_first_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ben_o")
-    return spark.sql(_BENFORD_SQL.format(strtype="STRING", orders="sales_telegram_bot_data_pipeline_ben_o"))
 
 
 # --------------------------------------------------------------------------
@@ -645,9 +622,10 @@ FROM g GROUP BY l ORDER BY l_value
 """
 
 
-@register(
+register_sql(
     "l_diversity_audit",
-    oracle=_LDIV_SQL.format(customer="customer"),
+    lambda d, customer: _LDIV_SQL.format(customer=customer),
+    ("customer",),
     doc="l-diversity audit: within each quasi-identifier group (nation, "
     "account-balance kilo-band), how many DISTINCT sensitive values "
     "(market segment) appear — a k-anonymous group with one segment still "
@@ -656,9 +634,6 @@ FROM g GROUP BY l ORDER BY l_value
     "the release-gate sibling of k_anonymity_audit.",
     tags=("analytics", "privacy", "audit"),
 )
-def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ldiv_c")
-    return spark.sql(_LDIV_SQL.format(customer="sales_telegram_bot_data_pipeline_ldiv_c"))
 
 
 # --------------------------------------------------------------------------
@@ -864,12 +839,15 @@ FROM w
 """
 
 
-@register(
+def _ab_sql(d: Dialect, events: str) -> str:
+    user = f"CAST(user_id AS {d.string_type})"
+    return _AB_SQL.format(hash=d.md5_prefix_int(f"('ab|' || {user})"), events=events)
+
+
+register_sql(
     "ab_conversion_ztest",
-    oracle=_AB_SQL.format(
-        hash=DUCKDB.md5_prefix_int("('ab|' || CAST(user_id AS VARCHAR))"),
-        events="events",
-    ),
+    _ab_sql,
+    ("events",),
     doc="Hash-split A/B conversion test: users route to arms by a portable "
     "content hash (deterministic, balanced, no RNG — the same assignment "
     "every engine and every run), per-arm purchase-conversion rates, lift, "
@@ -878,14 +856,6 @@ FROM w
     "groupBy(user) + one tiny pivot.",
     tags=("analytics", "experiment", "stats"),
 )
-def ab_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ab_ev")
-    return spark.sql(
-        _AB_SQL.format(
-            hash=SPARK.md5_prefix_int("('ab|' || CAST(user_id AS STRING))"),
-            events="sales_telegram_bot_data_pipeline_ab_ev",
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -921,9 +891,10 @@ ORDER BY p_brand
 """
 
 
-@register(
+register_sql(
     "discount_quantity_correlation",
-    oracle=_ELASTICITY_SQL.format(lineitem="lineitem", part="part"),
+    lambda d, lineitem, part: _ELASTICITY_SQL.format(lineitem=lineitem, part=part),
+    ("lineitem", "part"),
     doc="Per-brand Pearson correlation of discount vs quantity (the price-"
     "elasticity proxy question).  Both variables are EXACT small integers "
     "(discount in percent points, quantity in units), the five classic "
@@ -932,12 +903,6 @@ ORDER BY p_brand
     "expression per group — the grouped sibling of revenue_trend_ols.",
     tags=("analytics", "stats", "agg"),
 )
-def discount_quantity_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_el_l")
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("sales_telegram_bot_data_pipeline_el_p")
-    return spark.sql(
-        _ELASTICITY_SQL.format(lineitem="sales_telegram_bot_data_pipeline_el_l", part="sales_telegram_bot_data_pipeline_el_p")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -967,29 +932,24 @@ ORDER BY o_orderpriority, sla_bucket
 """
 
 
-@register(
+def _sla_sql(d: Dialect, orders: str, lineitem: str) -> str:
+    if d.name == "spark":
+        dd_args = "to_date(l_shipdate), to_date(o_orderdate)"
+    else:
+        dd_args = "'day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE)"
+    return _SLA_SQL.format(dd_args=dd_args, orders=orders, lineitem=lineitem)
+
+
+register_sql(
     "shipping_sla_buckets",
-    oracle=_SLA_SQL.format(
-        dd_args="'day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE)",
-        orders="orders",
-        lineitem="lineitem",
-    ),
+    _sla_sql,
+    ("orders", "lineitem"),
     doc="Order-to-ship SLA distribution: per priority, lineitems bucketed "
     "by days from order to ship (0-7 / 8-14 / 15-30 / 31+) with exact "
     "shares — the fulfilment-latency scorecard.  One co-partitioned "
     "fact-to-fact equi-join, integer day math, map-combinable buckets.",
     tags=("analytics", "sla", "agg"),
 )
-def shipping_sla_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_sla_o")
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_sla_l")
-    return spark.sql(
-        _SLA_SQL.format(
-            dd_args="to_date(l_shipdate), to_date(o_orderdate)",
-            orders="sales_telegram_bot_data_pipeline_sla_o",
-            lineitem="sales_telegram_bot_data_pipeline_sla_l",
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1027,9 +987,12 @@ ORDER BY relation
 """
 
 
-@register(
+register_sql(
     "referential_integrity_audit",
-    oracle=_RI_SQL.format(lineitem="lineitem", orders="orders", customer="customer"),
+    lambda d, lineitem, orders, customer: _RI_SQL.format(
+        lineitem=lineitem, orders=orders, customer=customer
+    ),
+    ("lineitem", "orders", "customer"),
     doc="Referential-integrity audit across the fact chain: lineitems whose "
     "order is missing, orders whose customer is missing, and childless "
     "orders — each as a LEFT-join orphan count with exact violation rates. "
@@ -1038,13 +1001,6 @@ ORDER BY relation
     "3-row output.",
     tags=("analytics", "audit", "integrity"),
 )
-def referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ri_l")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ri_o")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ri_c")
-    return spark.sql(
-        _RI_SQL.format(lineitem="sales_telegram_bot_data_pipeline_ri_l", orders="sales_telegram_bot_data_pipeline_ri_o", customer="sales_telegram_bot_data_pipeline_ri_c")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1086,13 +1042,17 @@ FROM med m CROSS JOIN anchor a
 """
 
 
-@register(
+def _theilsen_sql(d: Dialect, orders: str) -> str:
+    median = "percentile" if d.name == "spark" else "quantile_cont"
+    return _THEILSEN_SQL.format(
+        datediff=d.days_since("o_orderdate"), orders=orders, median_fn=f"{median}(slope, 0.5)"
+    )
+
+
+register_sql(
     "theilsen_trend_robust",
-    oracle=_THEILSEN_SQL.format(
-        datediff="datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))",
-        orders="orders",
-        median_fn="quantile_cont(slope, 0.5)",
-    ),
+    _theilsen_sql,
+    ("orders",),
     doc="Theil–Sen robust trend over WEEKLY revenue: the MEDIAN of all "
     "pairwise week-to-week slopes — the estimator that shrugs off the "
     "outlier periods that drag revenue_trend_ols (its closed-form "
@@ -1103,15 +1063,6 @@ FROM med m CROSS JOIN anchor a
     "exact interpolated median runs on that bounded relation.",
     tags=("analytics", "stats", "regression"),
 )
-def theilsen_trend_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ts_o")
-    return spark.sql(
-        _THEILSEN_SQL.format(
-            datediff="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-            orders="sales_telegram_bot_data_pipeline_ts_o",
-            median_fn="percentile(slope, 0.5)",
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1166,9 +1117,10 @@ ORDER BY t_bucket
 """
 
 
-@register(
+register_sql(
     "t_closeness_audit",
-    oracle=_TCLOSE_SQL.format(customer="customer"),
+    lambda d, customer: _TCLOSE_SQL.format(customer=customer),
+    ("customer",),
     doc="t-closeness audit completing the privacy triple (k_anonymity_"
     "audit, l_diversity_audit): per quasi-identifier group (nation, "
     "balance kilo-band), the total-variation distance between the group's "
@@ -1179,9 +1131,6 @@ ORDER BY t_bucket
     "flagged, output histogrammed by 0.05 distance buckets.",
     tags=("analytics", "privacy", "audit"),
 )
-def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_tc_c")
-    return spark.sql(_TCLOSE_SQL.format(customer="sales_telegram_bot_data_pipeline_tc_c"))
 
 
 # --------------------------------------------------------------------------
@@ -1225,12 +1174,10 @@ ORDER BY event_type, day_no
 """
 
 
-@register(
+register_sql(
     "control_chart_anomalies",
-    oracle=_CCHART_SQL.format(
-        datediff="datediff('day', DATE '1970-01-01', CAST(ts AS DATE))",
-        events="events",
-    ),
+    lambda d, events: _CCHART_SQL.format(datediff=d.days_since("ts"), events=events),
+    ("events",),
     doc=f"Rolling control-chart anomaly detection: per event_type, each "
     f"day's count vs the trailing-{CCHART_WINDOW}-day mean/std (exact "
     "integer window sums -> identical double variance in both engines), "
@@ -1240,14 +1187,6 @@ ORDER BY event_type, day_no
     "(O(days) per partition, never corpus rows).",
     tags=("analytics", "timeseries", "anomaly", "window"),
 )
-def control_chart_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_cc_ev")
-    return spark.sql(
-        _CCHART_SQL.format(
-            datediff="datediff(to_date(ts), to_date('1970-01-01'))",
-            events="sales_telegram_bot_data_pipeline_cc_ev",
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1287,13 +1226,20 @@ ORDER BY custkey
 """
 
 
-@register(
+def _churn_sql(d: Dialect, orders: str) -> str:
+    if d.name == "spark":
+        cutoff = f"date_sub(h.dmax, {CHURN_HORIZON_DAYS})"
+        gap = f"datediff({cutoff}, agg.last_obs_day)"
+    else:
+        cutoff = f"(h.dmax - {CHURN_HORIZON_DAYS})"
+        gap = f"datediff('day', agg.last_obs_day, h.dmax - {CHURN_HORIZON_DAYS})"
+    return _CHURN_SQL.format(orders=orders, cutoff=cutoff, gap=gap)
+
+
+register_sql(
     "churn_label_features",
-    oracle=_CHURN_SQL.format(
-        orders="orders",
-        cutoff=f"(h.dmax - {CHURN_HORIZON_DAYS})",
-        gap=f"datediff('day', agg.last_obs_day, h.dmax - {CHURN_HORIZON_DAYS})",
-    ),
+    _churn_sql,
+    ("orders",),
     doc=f"Supervised training-set builder for churn: label = customer "
     f"places NO order in the final {CHURN_HORIZON_DAYS}-day horizon; "
     "features (order count, exact-cents spend, distinct order days, "
@@ -1305,15 +1251,6 @@ ORDER BY custkey
     "self-join.",
     tags=("analytics", "training", "agg"),
 )
-def churn_label_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ch_o")
-    return spark.sql(
-        _CHURN_SQL.format(
-            orders="sales_telegram_bot_data_pipeline_ch_o",
-            cutoff=f"date_sub(h.dmax, {CHURN_HORIZON_DAYS})",
-            gap=f"datediff(date_sub(h.dmax, {CHURN_HORIZON_DAYS}), agg.last_obs_day)",
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1495,8 +1432,8 @@ ORDER BY event_type
     tags=("analytics", "markov", "iteration"),
 )
 def markov_stationary_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_mk_ev")
-    return spark.sql(_markov_stationary_fold_sql("sales_telegram_bot_data_pipeline_mk_ev"))
+    events = table_view(spark, sf_dir, "events")
+    return spark.sql(_markov_stationary_fold_sql(events))
 
 
 # --------------------------------------------------------------------------
@@ -1539,13 +1476,18 @@ ORDER BY n.lag
 """
 
 
-@register(
+def _acf_sql(d: Dialect, orders: str) -> str:
+    if d.name == "spark":
+        lags = f"SELECT explode(sequence(1, {ACF_MAX_LAG})) AS lag"
+    else:
+        lags = f"SELECT unnest(generate_series(1, {ACF_MAX_LAG})) AS lag"
+    return _ACF_SQL.format(dayno=d.days_since("o_orderdate"), orders=orders, lags_rel=lags)
+
+
+register_sql(
     "acf_daily_revenue",
-    oracle=_ACF_SQL.format(
-        dayno="datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))",
-        orders="orders",
-        lags_rel=f"SELECT unnest(generate_series(1, {ACF_MAX_LAG})) AS lag",
-    ),
+    _acf_sql,
+    ("orders",),
     doc=f"Autocorrelation of daily revenue at lags 1..{ACF_MAX_LAG} — the "
     "time-series seasonality diagnostic (weekly cadence shows as a lag-7 "
     "peak).  EXACT arithmetic: the day series aggregates to integer "
@@ -1556,15 +1498,6 @@ ORDER BY n.lag
     "the BOUNDED day-domain aggregate.",
     tags=("analytics", "timeseries", "self-join"),
 )
-def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_acf_o")
-    return spark.sql(
-        _ACF_SQL.format(
-            dayno="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-            orders="sales_telegram_bot_data_pipeline_acf_o",
-            lags_rel=f"SELECT explode(sequence(1, {ACF_MAX_LAG})) AS lag",
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1606,12 +1539,10 @@ FROM s CROSS JOIN ties CROSS JOIN n
 """
 
 
-@register(
+register_sql(
     "mann_kendall_trend",
-    oracle=_MK_TREND_SQL.format(
-        datediff="datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))",
-        orders="orders",
-    ),
+    lambda d, orders: _MK_TREND_SQL.format(datediff=d.days_since("o_orderdate"), orders=orders),
+    ("orders",),
     doc="Mann-Kendall monotone-trend TEST on the weekly revenue series — "
     "the significance companion to theilsen_trend_robust's slope (same "
     "weekly grain, same bounded O(weeks^2) pair relation): S = sum of "
@@ -1621,14 +1552,6 @@ FROM s CROSS JOIN ties CROSS JOIN n
     "assumption, unlike revenue_trend_ols's F.",
     tags=("analytics", "timeseries", "stats"),
 )
-def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_mkt_o")
-    return spark.sql(
-        _MK_TREND_SQL.format(
-            datediff="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-            orders="sales_telegram_bot_data_pipeline_mkt_o",
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1716,20 +1639,20 @@ def _cusum_prefix_oracle() -> str:
     tags=("analytics", "timeseries", "spc"),
 )
 def cusum_change_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_cu_o")
+    orders = table_view(spark, sf_dir, "orders")
     # Spark side: the prefix sum rides the distributed range-prefix-sum
     # primitive over the week order instead of a global window
     from .scalars_extra import range_prefix_summed
 
     inner = _CUSUM_SQL.format(
         datediff="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-        orders="sales_telegram_bot_data_pipeline_cu_o",
+        orders=orders,
         prefix_rel="SELECT x, pc FROM sales_telegram_bot_data_pipeline_cu_prefix",
     )
     d_sql = (
         _CUSUM_D_SQL.format(
             datediff="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-            orders="sales_telegram_bot_data_pipeline_cu_o",
+            orders=orders,
         )
         + "\nSELECT x, dv FROM d"
     )
@@ -1773,9 +1696,10 @@ FROM cell ORDER BY event_type
 """
 
 
-@register(
+register_sql(
     "aggregate_sensitivity_audit",
-    oracle=_SENS_SQL.format(events="events"),
+    lambda d, events: _SENS_SQL.format(events=events),
+    ("events",),
     doc="Per-aggregate-cell SENSITIVITY audit: the largest single user's "
     "row and value contribution share per event_type — the number that "
     "(a) flags cells effectively describing one individual before a "
@@ -1786,9 +1710,6 @@ FROM cell ORDER BY event_type
     "release family beside k-anonymity / l-diversity / t-closeness.",
     tags=("analytics", "privacy", "agg"),
 )
-def aggregate_sensitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_sens_ev")
-    return spark.sql(_SENS_SQL.format(events="sales_telegram_bot_data_pipeline_sens_ev"))
 
 
 # --------------------------------------------------------------------------
@@ -1825,12 +1746,15 @@ FROM agg ORDER BY event_type
 """
 
 
-@register(
+def _circ_sql(d: Dialect, events: str) -> str:
+    h, m, s = (d.extract(f, "ts") for f in ("hour", "minute", "second"))
+    return _CIRC_SQL.format(events=events, sod=f"{h} * 3600 + {m} * 60 + {s}")
+
+
+register_sql(
     "circular_time_profile",
-    oracle=_CIRC_SQL.format(
-        events="events",
-        sod="EXTRACT(hour FROM ts) * 3600 + EXTRACT(minute FROM ts) * 60 + EXTRACT(second FROM ts)",
-    ),
+    _circ_sql,
+    ("events",),
     doc="Circular (directional) statistics of event time-of-day per type: "
     "the mean hour computed on the CIRCLE (23:00 and 01:00 average to "
     "midnight, not noon — the error every linear mean makes on clock "
@@ -1841,14 +1765,6 @@ FROM agg ORDER BY event_type
     "empirical contract as the freshness profile).",
     tags=("analytics", "timeseries", "stats"),
 )
-def circular_time_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_circ_ev")
-    return spark.sql(
-        _CIRC_SQL.format(
-            events="sales_telegram_bot_data_pipeline_circ_ev",
-            sod="hour(ts) * 3600 + minute(ts) * 60 + second(ts)",
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1883,13 +1799,20 @@ ORDER BY c.cohort_q, c.age_q
 """
 
 
-@register(
+def _ltv_sql(d: Dialect, orders: str) -> str:
+    if d.name == "spark":
+        qnum_d1 = "datediff(d1, to_date('1970-01-01')) div 91"
+        qnum_o = f"{d.days_since('o.o_orderdate')} div 91"
+    else:
+        qnum_d1 = "datediff('day', DATE '1970-01-01', d1) // 91"
+        qnum_o = f"{d.days_since('o.o_orderdate')} // 91"
+    return _LTV_SQL.format(orders=orders, qnum_d1=qnum_d1, qnum_o=qnum_o)
+
+
+register_sql(
     "cohort_ltv_triangle",
-    oracle=_LTV_SQL.format(
-        orders="orders",
-        qnum_d1="datediff('day', DATE '1970-01-01', d1) // 91",
-        qnum_o="datediff('day', DATE '1970-01-01', CAST(o.o_orderdate AS DATE)) // 91",
-    ),
+    _ltv_sql,
+    ("orders",),
     doc="Cohort LTV triangle: acquisition-quarter x quarters-since-"
     "acquisition revenue matrix with per-cohort-member normalization — "
     "the finance view of customer lifetime value (each cohort row reads "
@@ -1901,12 +1824,3 @@ ORDER BY c.cohort_q, c.age_q
     "(presence), growth_accounting_weekly (flows), this (value).",
     tags=("analytics", "cohort", "agg"),
 )
-def cohort_ltv_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ltv_o")
-    return spark.sql(
-        _LTV_SQL.format(
-            orders="sales_telegram_bot_data_pipeline_ltv_o",
-            qnum_d1="datediff(d1, to_date('1970-01-01')) div 91",
-            qnum_o="datediff(to_date(o.o_orderdate), to_date('1970-01-01')) div 91",
-        )
-    )

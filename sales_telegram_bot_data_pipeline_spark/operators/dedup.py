@@ -28,18 +28,13 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect, strip_order_by
-from ..registry import register
+from ..registry import register, register_sql
 from ..session import fixed_plan
-from ..sources.tables import load_table
+from ..sources.tables import table_view
 
 N_HASHES = 8
 BAND_SIZE = 2  # → 4 bands
 JACCARD_THRESHOLD = 0.4
-
-
-def _doc_view(spark: SparkSession, sf_dir: str, name: str = "sales_telegram_bot_data_pipeline_docs") -> str:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(name)
-    return name
 
 
 # --------------------------------------------------------------------------
@@ -54,15 +49,14 @@ def _exact_sql(d: Dialect, table: str) -> str:
     )
 
 
-@register(
+register_sql(
     "dedup_exact",
-    oracle=_exact_sql(DUCKDB, "documents"),
+    _exact_sql,
+    ("documents",),
     doc="Exact dedup: 60-bit content hash groupBy, keep min doc_id per "
     "group. Map-side combine; text never shuffles.",
     tags=("dedup",),
 )
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_exact_sql(SPARK, _doc_view(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -168,7 +162,7 @@ def _materialized_shingles(spark: SparkSession, view: str, name: str) -> str:
     tags=("dedup", "join"),
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     rel = _materialized_shingles(spark, view, "sales_telegram_bot_data_pipeline_sh_j")
     return spark.sql(_jaccard_sql(SPARK, view, shingles_rel=rel))
 
@@ -242,7 +236,7 @@ ORDER BY doc_a, doc_b
     tags=("dedup", "join", "skew"),
 )
 def dedup_jaccard_stopshingle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     # stored session relations shared with the prefix-filter twin (the r9
     # bench head showed both recomputing the identical shingle + df tables)
     rel = _shingles_session_rel(spark, sf_dir)
@@ -321,16 +315,15 @@ ORDER BY doc_a, doc_b
 """
 
 
-@register(
+register_sql(
     "dedup_minhash_lsh",
-    oracle=_lsh_pairs_sql(DUCKDB, "documents"),
+    _lsh_pairs_sql,
+    ("documents",),
     doc="MinHash (8 portable hash fns over 3-gram shingles) + LSH banding "
     "(4 bands x 2): candidate near-dup pairs from band-bucket equi-join — "
     "4 rows/doc join input regardless of document size.",
     tags=("dedup", "lsh"),
 )
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_lsh_pairs_sql(SPARK, _doc_view(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -356,15 +349,14 @@ FROM hashed GROUP BY doc_id ORDER BY doc_id
 """
 
 
-@register(
+register_sql(
     "dedup_simhash",
-    oracle=_simhash_sql(DUCKDB, "documents"),
+    _simhash_sql,
+    ("documents",),
     doc="SimHash: 16-bit majority fingerprint over portable word hashes; "
     "near-dups land in Hamming-adjacent fingerprints.",
     tags=("dedup", "hash"),
 )
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_simhash_sql(SPARK, _doc_view(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -446,9 +438,10 @@ ORDER BY doc_a, doc_b
 """
 
 
-@register(
+register_sql(
     "simhash_neardup",
-    oracle=_simhash_neardup_sql(DUCKDB, "documents"),
+    _simhash_neardup_sql,
+    ("documents",),
     doc=f"SimHash near-dup, EXACT at Hamming <= {HAMMING_K} and paired at "
     f"fingerprint granularity: {SIMHASH_BITS}-bit fingerprints grouped "
     f"(rep, count), pigeonhole {N_BLOCKS}x{BLOCK_BITS}-bit block equi-join "
@@ -457,8 +450,6 @@ ORDER BY doc_a, doc_b
     "output stays linear in distinct fingerprints on dup-heavy corpora.",
     tags=("dedup", "hash", "join"),
 )
-def simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_simhash_neardup_sql(SPARK, _doc_view(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -671,7 +662,7 @@ FROM reach GROUP BY a ORDER BY doc_id
     tags=("dedup", "clustering", "iterative"),
 )
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     docs = spark.table(view).select("doc_id")
     pairs = spark.sql(_lsh_pairs_sql(SPARK, view))
     return connected_components(spark, docs, pairs).orderBy("doc_id")
@@ -747,7 +738,7 @@ def _shingles_ranked_view(spark: SparkSession, sf_dir: str) -> str:
     re-running the df join + per-doc ordering window per query (r10
     verdict task 2: the per-doc ORDER BY dominated the bench head —
     sort once at build, not per consumer)."""
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
 
     def build():
         sh = _shingles_sql(SPARK, view)
@@ -800,7 +791,7 @@ def _lsh_pairs_view(spark: SparkSession, sf_dir: str) -> str:
     stored table exactly as production reads the written candidate-pair
     table.  ``dedup_minhash_lsh`` (the pair-generation op itself) stays
     live-measured."""
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     return session_view(
         spark, sf_dir, "lshp",
         lambda: spark.sql(strip_order_by(_lsh_pairs_sql(SPARK, view))),
@@ -815,7 +806,7 @@ def _cc_labels_view(spark: SparkSession, sf_dir: str) -> str:
     ``dedup_connected_components``; the selection/audit consumers read
     the stored labels (built from the stored pair view)."""
     def build():
-        view = _doc_view(spark, sf_dir)
+        view = table_view(spark, sf_dir, "documents")
         docs = spark.table(view).select("doc_id")
         pairs = spark.table(_lsh_pairs_view(spark, sf_dir))
         return connected_components(spark, docs, pairs)
@@ -853,7 +844,7 @@ ORDER BY t.doc_id
     tags=("dedup", "clustering"),
 )
 def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     docs = spark.table(view)
     labels = spark.table(_cc_labels_view(spark, sf_dir))
     sizes = labels.groupBy("cluster_rep").agg(F.count("*").alias("cluster_size"))
@@ -955,7 +946,7 @@ ORDER BY doc_id
 def dedup_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     # Materialize the O(tokens) gram explode once (guide §3.3): the df
     # aggregation and the mark join-back each re-ran the full explode —
     # the same move _materialized_shingles makes for the Jaccard index.
@@ -1048,9 +1039,9 @@ ORDER BY vec_id
     tags=("dedup", "graph", "iterative"),
 )
 def pagerank_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import _emb_view, _neardup_pairs_view
+    from .similarity import _neardup_pairs_view
 
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     # the stored pair view feeds every unrolled iteration via the edges
     # CTE (Spark would otherwise inline and recompute it PR_ITERS times)
     spark.table(_neardup_pairs_view(spark, sf_dir)).createOrReplaceTempView(
@@ -1116,7 +1107,7 @@ ORDER BY bd.doc_id
     tags=("dedup", "lsh", "incremental"),
 )
 def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     # bands is referenced twice (idx + batch); materialize once — the same
     # move every multi-consumer relation in this module makes.  On a real
     # deployment idx is ALREADY a stored table; only the batch's bands are
@@ -1184,9 +1175,9 @@ ORDER BY vec_id
     tags=("dedup", "graph", "join"),
 )
 def triangle_count_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import _emb_view, _neardup_pairs_view
+    from .similarity import _neardup_pairs_view
 
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     # stored pair view: the relation feeds three aliases of the edges CTE,
     # which Spark would inline and recompute
     spark.table(_neardup_pairs_view(spark, sf_dir)).createOrReplaceTempView(
@@ -1289,9 +1280,10 @@ ORDER BY doc_id
 """
 
 
-@register(
+register_sql(
     "winnowing_fingerprint_density",
-    oracle=_wnw_density_sql(DUCKDB, "documents"),
+    _wnw_density_sql,
+    ("documents",),
     doc=f"Winnowing fingerprint selection (Schleimer et al. 2003 / MOSS): "
     f"{WNW_K}-word gram hashes, rightmost-min selection over every "
     f"{WNW_W}-gram window via 2*(W-1) fixed-frame MINs on one per-doc sort "
@@ -1299,8 +1291,6 @@ ORDER BY doc_id
     "guaranteed-coverage sparse sketch for substring-level matching.",
     tags=("dedup", "text", "fingerprint", "window"),
 )
-def winnowing_fingerprint_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_wnw_density_sql(SPARK, _doc_view(spark, sf_dir)))
 
 
 def _wnw_matches_sql(d: Dialect, table: str, fp_rel: str | None = None) -> str:
@@ -1348,7 +1338,7 @@ ORDER BY doc_a, doc_b
     tags=("dedup", "text", "fingerprint"),
 )
 def winnowing_doc_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     spark.sql(
         f"SELECT DISTINCT doc_id, h FROM ({_wnw_selected_rel(SPARK, view)}) s WHERE sel = 1"
     ).localCheckpoint().createOrReplaceTempView("sales_telegram_bot_data_pipeline_wnw_fp")
@@ -1486,9 +1476,9 @@ ORDER BY vec_id
     tags=("dedup", "graph", "iterative"),
 )
 def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import _emb_view, _neardup_pairs_view
+    from .similarity import _neardup_pairs_view
 
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     spark.table(_neardup_pairs_view(spark, sf_dir)).createOrReplaceTempView(
         "sales_telegram_bot_data_pipeline_lpa_pairs"
     )
@@ -1555,7 +1545,7 @@ FROM cls
     tags=("dedup", "lsh", "audit"),
 )
 def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     # audits read the STORED shingle table (production writes it once per
     # corpus snapshot); the explode itself stays live-measured by
     # dedup_ngram_jaccard's own per-call materialization
@@ -1690,7 +1680,7 @@ ORDER BY contained_doc, container_doc
     tags=("dedup", "join", "text"),
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _containment_corpus(SPARK, _doc_view(spark, sf_dir))
+    view = _containment_corpus(SPARK, table_view(spark, sf_dir, "documents"))
     # Shingling is doc-local, so the md5-subset corpus's shingles are
     # EXACTLY the stored shingle table filtered by the same doc_id
     # predicate — production filters the written shingle table rather
@@ -1753,7 +1743,7 @@ ORDER BY doc_id
 def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     docs = spark.table(view)
     labels = spark.table(_cc_labels_view(spark, sf_dir))
     quality = docs.select(
@@ -1833,7 +1823,7 @@ ORDER BY doc_id
     tags=("dedup", "clustering", "window"),
 )
 def dedup_cluster_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     labels = spark.table(_cc_labels_view(spark, sf_dir))
     labels.createOrReplaceTempView("sales_telegram_bot_data_pipeline_ccap_labels")
     return spark.sql(
@@ -1920,7 +1910,7 @@ FROM err
     tags=("dedup", "lsh", "audit"),
 )
 def minhash_estimate_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     # reads the stored shingle table (see lsh_recall_audit note)
     rel = _shingles_session_rel(spark, sf_dir)
     spark.table(_lsh_pairs_view(spark, sf_dir)).createOrReplaceTempView(
@@ -2045,7 +2035,7 @@ ORDER BY doc_a, doc_b
     tags=("dedup", "join", "prefix-filter"),
 )
 def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     # the stored shingle table carries its corpus stats (sh_df, n_sh) and
     # the rarest-first rank pos — the prefix is a pure FILTER over the
     # stored artifact (pos <= |s| - ceil(t|s|) + 1), no per-call df join
@@ -2223,7 +2213,7 @@ def _tune_sig_view(spark: SparkSession, sf_dir: str, view: str) -> str:
     tags=("dedup", "lsh", "audit"),
 )
 def lsh_band_tuning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _band_tune_corpus(SPARK, _doc_view(spark, sf_dir))
+    view = _band_tune_corpus(SPARK, table_view(spark, sf_dir, "documents"))
     sig_view = _tune_sig_view(spark, sf_dir, view)
     cands = spark.sql(
         _band_cands_sql(SPARK, view, sig_rel=f"SELECT * FROM {sig_view}")
@@ -2341,9 +2331,9 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs exactly once).  Survivor sets shrink monotonically, so stopping
     early at an unchanged count is EXACTLY the fixed point the remaining
     rounds would no-op through — results identical to the full unroll."""
-    from .similarity import _emb_view, _neardup_pairs_view
+    from .similarity import _neardup_pairs_view
 
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     pairs = spark.table(_neardup_pairs_view(spark, sf_dir))
     # Loop mechanics share the CC fixpoint's round discipline (VERDICT r12
     # task 2 — the peel measured 51 Spark jobs of ~0.15 s scheduler
@@ -2512,7 +2502,7 @@ def softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two) and the STORED pair view (the lshp artifact every graph
     # consumer reads; pair generation stays live-measured by its
     # declared twin dedup_minhash_lsh).  12 -> 2 static scans.
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(
         _softdedup_sql(
             SPARK,
@@ -2566,7 +2556,7 @@ FROM walk GROUP BY doc_id ORDER BY doc_id
     tags=("dedup", "graph", "iterative"),
 )
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     mat = spark.table(_lsh_pairs_view(spark, sf_dir))
     sym = (
         mat.selectExpr("doc_a AS src", "doc_b AS dst")
@@ -2686,9 +2676,9 @@ ORDER BY vec_id
 )
 def clustering_coefficient_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
-    from .similarity import _emb_view, _neardup_pairs_view
+    from .similarity import _neardup_pairs_view
 
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     spark.table(_neardup_pairs_view(spark, sf_dir)).createOrReplaceTempView(
         "sales_telegram_bot_data_pipeline_cc_pairs"
     )
@@ -2901,9 +2891,8 @@ ORDER BY doc_a, doc_b
     tags=("dedup", "similarity", "prefix-filter"),
 )
 def apss_cosine_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .curation import _doc_view
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_apss_docs")
+    view = table_view(spark, sf_dir, "documents")
     # materialize-once: the weighted posting relation feeds tails, norms,
     # candidates and BOTH sides of the verify join — Spark inlines CTEs, so
     # without a break the tokenize/tf/df chain recomputes per consumer

@@ -39,9 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
-from ..sources.tables import load_table
-from .curation import _doc_view
+from ..registry import register, register_sql
+from ..sources.tables import load_table, table_view
 
 # --------------------------------------------------------------------------
 # exact tie-corrected ROC-AUC of the quality classifier vs the 'en' label
@@ -111,7 +110,7 @@ def roc_auc_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .lm_quality import _logreg_sql
     from .scalars_extra import range_prefix_summed
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_auc_docs")
+    view = table_view(spark, sf_dir, "documents")
     scored = spark.sql(_logreg_sql(SPARK, view)).select(
         F.col("quality_prob").alias("v"), (F.col("lang") == "en").alias("pos")
     )
@@ -189,9 +188,10 @@ ORDER BY source_a, source_b
 """
 
 
-@register(
+register_sql(
     "welch_ttest_sources",
-    oracle=_WELCH_SQL.format(table="documents"),
+    lambda d, documents: _WELCH_SQL.format(table=documents),
+    ("documents",),
     doc="Welch's unequal-variance t-test of mean doc length between every "
     "pair of sources: one map-combinable per-source (n, sum, sumsq) "
     "aggregate collapses the corpus to |sources| rows, then a bounded "
@@ -202,9 +202,6 @@ ORDER BY source_a, source_b
     "sums exact in BIGINT (sumsq <= len^2 * rows ~ 3e17 at 100 TB).",
     tags=("evaluation", "stats", "self-join"),
 )
-def welch_ttest_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_welch_docs")
-    return spark.sql(_WELCH_SQL.format(table=view))
 
 
 # --------------------------------------------------------------------------
@@ -250,7 +247,7 @@ ORDER BY n_chars DESC, doc_id
     tags=("evaluation", "skyline", "dominance"),
 )
 def skyline_pareto_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_sky_docs")
+    view = table_view(spark, sf_dir, "documents")
     pts = spark.sql(_skyline_pts_sql(SPARK, view)).localCheckpoint(eager=False)
     g = pts.groupBy("x").agg(F.max("y").alias("my"))
     ga, gb = g.alias("a"), g.alias("b")
@@ -375,10 +372,10 @@ cum AS (
 def kaplan_meier_repurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scalars_extra import range_prefix_summed_pair
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_km_o")
+    orders = table_view(spark, sf_dir, "orders")
     g = spark.sql(
         _KM_DUR_SQL.format(
-            orders="sales_telegram_bot_data_pipeline_km_o",
+            orders=orders,
             dd_event="datediff(s.d2, s.d1)",
             dd_censor="datediff(h.hmax, s.d1)",
         )
@@ -465,9 +462,10 @@ ORDER BY cm.declared_lang
 """
 
 
-@register(
+register_sql(
     "langid_eval_confusion",
-    oracle=_langid_confusion_sql(DUCKDB, "documents"),
+    _langid_confusion_sql,
+    ("documents",),
     doc="Confusion table of the registered lang_id_heuristic detector "
     "against the declared language label: per-language detection rates "
     "plus corpus precision/recall/F1 of the 'en' class (one-row scalar "
@@ -476,9 +474,6 @@ ORDER BY cm.declared_lang
     "free) and quality_gate_agreement_kappa (gate-vs-gate).",
     tags=("evaluation", "text", "agg"),
 )
-def langid_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_lc_docs")
-    return spark.sql(_langid_confusion_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -669,9 +664,10 @@ FROM sums s2 CROSS JOIN tot t
 """
 
 
-@register(
+register_sql(
     "anova_sources_doclen",
-    oracle=_ANOVA_SQL.format(table="documents"),
+    lambda d, documents: _ANOVA_SQL.format(table=documents),
+    ("documents",),
     doc="One-way ANOVA of doc length across ALL sources (the k-group "
     "extension of welch_ttest_sources): F = MSB/MSW and eta^2 from one "
     "per-source (n, sum, sumsq) aggregate.  Per-group fractional SS "
@@ -680,6 +676,3 @@ FROM sums s2 CROSS JOIN tot t
     "Identical ANSI text on both engines; O(1) output.",
     tags=("evaluation", "stats", "agg"),
 )
-def anova_sources_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_anova_docs")
-    return spark.sql(_ANOVA_SQL.format(table=view))

@@ -359,17 +359,6 @@ def group_detections(df: DataFrame) -> DataFrame:
     )
 
 
-def pivot_last_wins(df: DataFrame) -> DataFrame:
-    """op 41: class-keyed fold to a wide row; deterministic last-wins via
-    max_by(ocr_text, det_idx) (the reference's loop makes 'last' an
-    iteration-order accident, data_pipeline.py:109-123)."""
-    return (
-        df.groupBy("image_id", "shop_name")
-        .pivot("class_name", list(MODEL2_CLASSES))
-        .agg(F.expr("max_by(ocr_text, det_idx)"))
-    )
-
-
 def _det2_feed_view(spark: SparkSession, sf_dir: str, padding: float = 0.10) -> str:
     """The padded model2+OCR detection feed as a STORED session view —
     the reference's DAG #1 runs inference once per image batch and every

@@ -36,18 +36,11 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
-from ..sources.tables import load_table
+from ..functions.dialect import Dialect
+from ..registry import register_sql
 
 MIN_TOKEN_LEN = 4  # tokens shorter than this are ambiguous at distance 1
-
-
-def _doc_view(spark: SparkSession, sf_dir: str, name: str = "sales_telegram_bot_data_pipeline_docs") -> str:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(name)
-    return name
 
 
 def _delete_keys(d: Dialect, s: str) -> str:
@@ -131,9 +124,10 @@ ORDER BY token
 """
 
 
-@register(
+register_sql(
     "symspell_name_correction",
-    oracle=_symspell_sql(DUCKDB, "documents", "part"),
+    _symspell_sql,
+    ("documents", "part"),
     doc="SymSpell fuzzy name correction as a delete-neighborhood EQUI-join: "
     "every string expands to its k=1 deletion keys, distance<=1 pairs "
     "necessarily collide on a key, levenshtein refines candidates only — "
@@ -142,13 +136,6 @@ ORDER BY token
     "vocabulary.",
     tags=("linkage", "text", "join"),
 )
-def symspell_name_correction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "part").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_sym_part"
-    )
-    return spark.sql(
-        _symspell_sql(SPARK, _doc_view(spark, sf_dir), "sales_telegram_bot_data_pipeline_sym_part")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -205,9 +192,14 @@ ORDER BY f.o_orderkey
 """
 
 
-@register(
+register_sql(
     "pit_join_scd2",
-    oracle=_PIT_SQL.format(orders="orders", customer="customer", mod=CUSTKEY_MOD),
+    lambda d, orders, customer: _PIT_SQL.format(
+        orders=orders,
+        customer=customer,
+        mod=CUSTKEY_MOD,
+    ),
+    ("orders", "customer"),
     doc="Point-in-time join: each fact row picks the SCD2 dimension version "
     "current AT its event time — equi-join on the dimension key with "
     "[valid_from, valid_to) containment as a residual predicate (never a "
@@ -216,16 +208,6 @@ ORDER BY f.o_orderkey
     "engine form of the reference's valid_from/valid_to validity model.",
     tags=("linkage", "temporal", "join", "scd2"),
 )
-def pit_join_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_pit_ord")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_pit_cust")
-    return spark.sql(
-        _PIT_SQL.format(
-            orders="sales_telegram_bot_data_pipeline_pit_ord",
-            customer="sales_telegram_bot_data_pipeline_pit_cust",
-            mod=CUSTKEY_MOD,
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -282,9 +264,10 @@ ORDER BY dirty_key
 """
 
 
-@register(
+register_sql(
     "record_linkage_blocked",
-    oracle=_record_linkage_sql(DUCKDB, "customer"),
+    _record_linkage_sql,
+    ("customer",),
     doc="Blocked pairwise record linkage: deterministically corrupted "
     "customer twins linked back to the master table via a "
     "corruption-preserved blocking key (last-4-chars + length equi-join) "
@@ -293,10 +276,3 @@ ORDER BY dirty_key
     "(is_correct column). Never all-pairs.",
     tags=("linkage", "fuzzy-join", "blocking"),
 )
-def record_linkage_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_link_customer"
-    )
-    return spark.sql(
-        _record_linkage_sql(SPARK, "sales_telegram_bot_data_pipeline_link_customer")
-    )

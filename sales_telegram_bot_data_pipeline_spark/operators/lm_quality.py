@@ -44,11 +44,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect, strip_order_by
-from ..functions.text import quality_fields_sql, stopword_ratio_sql
-from ..registry import register
-from .curation import BENCH_MOD, _doc_view
+from ..functions.text import quality_fields_sql
+from ..registry import register, register_sql
+from ..sources.tables import table_view
+from .curation import BENCH_MOD
 
-LM_K2 = 1  # add-k smoothing with k = 1/2: P = (2c2 + 1) / (2c1 + V)
 DSIR_BUCKETS = 4096
 TOKEN_BUDGET_PER_SOURCE = 1000  # binds on the test corpus (max source ~1.7k tokens)
 
@@ -122,9 +122,10 @@ ORDER BY doc_id
 """
 
 
-@register(
+register_sql(
     "bigram_lm_score",
-    oracle=_bigram_lm_sql(DUCKDB, "documents"),
+    _bigram_lm_sql,
+    ("documents",),
     doc="CCNet-style LM quality filter: add-1/2-smoothed bigram LM trained "
     f"on the frozen target subset (doc_id % {BENCH_MOD} = 0), every other "
     "doc scored by avg conditional log-prob + perplexity.  Model tables are "
@@ -135,8 +136,6 @@ ORDER BY doc_id
     "not guaranteed by construction).",
     tags=("quality", "lm", "text"),
 )
-def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_bigram_lm_sql(SPARK, _doc_view(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -200,7 +199,7 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize it once — (doc_id, bucket) integer pairs, far smaller than
     # the text they came from.  localCheckpoint locally; on a cluster this
     # is persist(MEMORY_AND_DISK) / a reliable checkpoint, same shape.
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     h = SPARK.md5_prefix_int("(w1 || ' ' || w2)")
     feats = (
         f"SELECT doc_id, ({h}) % {DSIR_BUCKETS} AS f "
@@ -263,16 +262,15 @@ ORDER BY doc_id
 """
 
 
-@register(
+register_sql(
     "quality_logreg_score",
-    oracle=_logreg_sql(DUCKDB, "documents"),
+    _logreg_sql,
+    ("documents",),
     doc="Classifier-based quality filtering (fasttext-classifier shape, "
     "deterministic stand-in weights): rule-based features -> codegen "
     "sigmoid -> keep flag.  Pure projection, shuffle-free, no Python.",
     tags=("quality", "scalar", "text"),
 )
-def quality_logreg_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_logreg_sql(SPARK, _doc_view(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -311,17 +309,16 @@ ORDER BY source, doc_id
 """
 
 
-@register(
+register_sql(
     "token_budget_selection",
-    oracle=_token_budget_sql(DUCKDB, "documents"),
+    _token_budget_sql,
+    ("documents",),
     doc=f"Data mixing: fill each source's {TOKEN_BUDGET_PER_SOURCE}-token "
     "budget with its most fluent docs — source-partitioned window cumsum "
     "(source is the parallel unit; skewed sources -> salted variant in "
     "operators/scale.py), prefix selection, fully deterministic.",
     tags=("curation", "sampling", "window"),
 )
-def token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_token_budget_sql(SPARK, _doc_view(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -402,7 +399,7 @@ ORDER BY c.decile
 def score_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scalars_extra import range_ranked
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     scored = strip_order_by(_logreg_sql(SPARK, view))
     base = spark.sql(
         f"SELECT doc_id, (lang = 'en') AS is_pos, -quality_prob AS neg "
@@ -499,9 +496,10 @@ ORDER BY doc_id
 """
 
 
-@register(
+register_sql(
     "kneser_ney_bigram_score",
-    oracle=_kneser_ney_sql(DUCKDB, "documents"),
+    _kneser_ney_sql,
+    ("documents",),
     doc=f"Interpolated Kneser-Ney bigram LM (D={KN_DISCOUNT}, Chen & "
     f"Goodman 1999) trained on the frozen target subset (doc_id % "
     f"{BENCH_MOD} = 0): absolute discounting + continuation-TYPE backoff, "
@@ -511,8 +509,6 @@ ORDER BY doc_id
     "over-penalizes rare-but-real collocations.",
     tags=("quality", "lm", "text"),
 )
-def kneser_ney_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_kneser_ney_sql(SPARK, _doc_view(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -554,9 +550,10 @@ FROM r
 """
 
 
-@register(
+register_sql(
     "quality_gate_agreement_kappa",
-    oracle=_kappa_sql(DUCKDB, "documents"),
+    _kappa_sql,
+    ("documents",),
     doc="Cohen's kappa between the two quality gates the engine ships — "
     "the published-heuristics gate (gopher_quality_gate) and the "
     "model-based gate (quality_logreg_score): confusion counts, observed "
@@ -567,8 +564,6 @@ FROM r
     "to 1.  One doc_id equi-join of two projections.",
     tags=("quality", "audit", "agg"),
 )
-def quality_gate_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_kappa_sql(SPARK, _doc_view(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -597,9 +592,10 @@ FROM joined GROUP BY bin ORDER BY bin
 """
 
 
-@register(
+register_sql(
     "quality_score_calibration",
-    oracle=_calibration_sql(DUCKDB, "documents"),
+    _calibration_sql,
+    ("documents",),
     doc="Reliability table for the model-based quality gate: logreg "
     "probability binned into deciles, mean predicted probability (exact "
     "1e-6-unit integer sums) vs the observed pass rate of the independent "
@@ -609,5 +605,3 @@ FROM joined GROUP BY bin ORDER BY bin
     "equi-join of two projections, <=10-row output.",
     tags=("quality", "audit", "calibration"),
 )
-def quality_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_calibration_sql(SPARK, _doc_view(spark, sf_dir)))

@@ -22,7 +22,7 @@ from ..functions.prices import (
     price_context_gates,
 )
 from ..registry import register
-from ..sources.tables import load_table
+from ..sources.tables import table_view
 
 CLASSES = ("item_name", "item_price", "item_member_price", "item_initial_price")
 NAME_WORDS = ("mleko", "jogurt", "cerstve", "smetanovy", "florian", "maslo")
@@ -202,9 +202,7 @@ def _detections_view(spark: SparkSession, sf_dir: str) -> str:
     from .dedup import session_view
 
     def build():
-        part_view = "sales_telegram_bot_data_pipeline_part_detfeed"
-        load_table(spark, sf_dir, "part").createOrReplaceTempView(part_view)
-        return spark.sql(_detections_sql(SPARK, part_view))
+        return spark.sql(_detections_sql(SPARK, table_view(spark, sf_dir, "part")))
 
     return session_view(spark, sf_dir, "detfeed", build)
 

@@ -24,8 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..registry import register
-from ..sources.tables import load_table
+from ..registry import register, register_sql
+from ..sources.tables import load_table, table_view
 
 
 def _dec(col: str, prec: int = 18, scale: int = 2) -> F.Column:
@@ -474,66 +474,48 @@ def cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Explicit GROUPING SETS (beyond rollup/cube): chosen subtotal combinations.
 # ---------------------------------------------------------------------------
-@register(
-    "grouping_sets_flag_priority",
-    oracle="""
+_GROUPING_SETS_SQL = """
 SELECT
   COALESCE(l_returnflag, 'ALL') AS returnflag,
   COALESCE(o_orderpriority, 'ALL') AS orderpriority,
   COUNT(*) AS n_rows,
   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+FROM {lineitem} JOIN {orders} ON l_orderkey = o_orderkey
 GROUP BY GROUPING SETS ((l_returnflag), (o_orderpriority))
 ORDER BY returnflag, orderpriority
-""",
+"""
+
+register_sql(
+    "grouping_sets_flag_priority",
+    lambda d, lineitem, orders: _GROUPING_SETS_SQL.format(lineitem=lineitem, orders=orders),
+    ("lineitem", "orders"),
     doc="Explicit GROUPING SETS: two independent subtotal dimensions in one "
     "pass over the join.",
     tags=("agg", "grouping-sets"),
 )
-def grouping_sets_flag_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_li")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ord")
-    return spark.sql("""
-SELECT
-  COALESCE(l_returnflag, 'ALL') AS returnflag,
-  COALESCE(o_orderpriority, 'ALL') AS orderpriority,
-  COUNT(*) AS n_rows,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-FROM sales_telegram_bot_data_pipeline_li JOIN sales_telegram_bot_data_pipeline_ord ON l_orderkey = o_orderkey
-GROUP BY GROUPING SETS ((l_returnflag), (o_orderpriority))
-ORDER BY returnflag, orderpriority
-""")
 
 
 # ---------------------------------------------------------------------------
 # Correlated scalar subquery (optimizer surface: decorrelation to join).
 # ---------------------------------------------------------------------------
-@register(
-    "correlated_max_order",
-    oracle="""
+_CORRELATED_MAX_SQL = """
 SELECT c_custkey, c_name,
        (SELECT CAST(MAX(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        FROM orders WHERE o_custkey = c_custkey) AS max_order_price
-FROM customer
+        FROM {orders} WHERE o_custkey = c_custkey) AS max_order_price
+FROM {customer}
 WHERE c_custkey < 100
 ORDER BY c_custkey
-""",
+"""
+
+register_sql(
+    "correlated_max_order",
+    lambda d, customer, orders: _CORRELATED_MAX_SQL.format(customer=customer, orders=orders),
+    ("customer", "orders"),
     doc="Correlated scalar subquery (Catalyst decorrelates it into an "
     "aggregate + left join — same shape the reference's per-key point "
     "lookups collapse into at scale).",
     tags=("subquery", "join"),
 )
-def correlated_max_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_cust")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ord2")
-    return spark.sql("""
-SELECT c_custkey, c_name,
-       (SELECT CAST(MAX(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        FROM sales_telegram_bot_data_pipeline_ord2 WHERE o_custkey = c_custkey) AS max_order_price
-FROM sales_telegram_bot_data_pipeline_cust
-WHERE c_custkey < 100
-ORDER BY c_custkey
-""")
 
 
 # ---------------------------------------------------------------------------
@@ -700,26 +682,21 @@ def disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Global-average subquery filter (TPC-H Q22 shape).
 # ---------------------------------------------------------------------------
-@register(
-    "above_avg_balance_customers",
-    oracle="""
+_ABOVE_AVG_SQL = """
 SELECT c_custkey, c_acctbal
-FROM customer
-WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer WHERE c_acctbal > 0)
+FROM {customer}
+WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM {customer} WHERE c_acctbal > 0)
 ORDER BY c_custkey
-""",
+"""
+
+register_sql(
+    "above_avg_balance_customers",
+    lambda d, customer: _ABOVE_AVG_SQL.format(customer=customer),
+    ("customer",),
     doc="Uncorrelated scalar-subquery filter (above-average balances, "
     "TPC-H Q22 shape) — one tiny broadcast of the aggregate.",
     tags=("subquery", "filter"),
 )
-def above_avg_balance_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_cust2")
-    return spark.sql("""
-SELECT c_custkey, c_acctbal
-FROM sales_telegram_bot_data_pipeline_cust2
-WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM sales_telegram_bot_data_pipeline_cust2 WHERE c_acctbal > 0)
-ORDER BY c_custkey
-""")
 
 
 # ---------------------------------------------------------------------------
@@ -1212,9 +1189,10 @@ ORDER BY ch.root
 """
 
 
-@register(
+register_sql(
     "recursive_hierarchy_rollup",
-    oracle=_hierarchy_sql("(c.c_custkey // 10)").format(table="customer"),
+    lambda d, customer: _hierarchy_sql(d.idiv("c.c_custkey", "10")).format(table=customer),
+    ("customer",),
     doc="WITH RECURSIVE hierarchy walk (Spark 4.1 recursive CTE, UNION ALL "
     "form shared verbatim with the DuckDB oracle): an acyclic customer "
     "forest (parent = custkey div 10), per-root member count / max depth / "
@@ -1222,15 +1200,6 @@ ORDER BY ch.root
     "the cyclic-graph closure remains connected_components' iterative job.",
     tags=("relational", "recursive", "hierarchy"),
 )
-def recursive_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_cust_hier"
-    )
-    return spark.sql(
-        _hierarchy_sql("(c.c_custkey div 10)").format(
-            table="sales_telegram_bot_data_pipeline_cust_hier"
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1256,9 +1225,10 @@ ORDER BY t.from_type, t.to_type
 """
 
 
-@register(
+register_sql(
     "event_transition_matrix",
-    oracle=_TRANSITION_SQL.format(events="events"),
+    lambda d, events: _TRANSITION_SQL.format(events=events),
+    ("events",),
     doc="First-order Markov transition matrix over per-user event "
     "sequences: LEAD window per user (user_id is the natural parallel "
     "unit, ties broken by event_id for determinism), transition counts "
@@ -1268,13 +1238,6 @@ ORDER BY t.from_type, t.to_type
     "transition-prior a sequence model trains against.",
     tags=("relational", "events", "window", "agg"),
 )
-def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_trans_events"
-    )
-    return spark.sql(
-        _TRANSITION_SQL.format(events="sales_telegram_bot_data_pipeline_trans_events")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1318,29 +1281,17 @@ FROM freq ORDER BY n_users DESC, path LIMIT {PATH_TOP_K}
 """
 
 
-def _register_paths():
-    from ..functions.dialect import DUCKDB, SPARK
-
-    @register(
-        "top_event_paths",
-        oracle=_event_paths_sql(DUCKDB, "events"),
-        doc=f"Path analysis: each user's first {PATH_PREFIX_LEN}-event "
-        "journey as an ordered path string, top-"
-        f"{PATH_TOP_K} paths by user count — one user_id shuffle + "
-        "map-side path counts + TakeOrdered; the sequence-mining "
-        "companion to funnel_conversion and event_transition_matrix.",
-        tags=("relational", "events", "agg", "topk"),
-    )
-    def top_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-        load_table(spark, sf_dir, "events").createOrReplaceTempView(
-            "sales_telegram_bot_data_pipeline_path_events"
-        )
-        return spark.sql(
-            _event_paths_sql(SPARK, "sales_telegram_bot_data_pipeline_path_events")
-        )
-
-
-_register_paths()
+register_sql(
+    "top_event_paths",
+    _event_paths_sql,
+    ("events",),
+    doc=f"Path analysis: each user's first {PATH_PREFIX_LEN}-event "
+    "journey as an ordered path string, top-"
+    f"{PATH_TOP_K} paths by user count — one user_id shuffle + "
+    "map-side path counts + TakeOrdered; the sequence-mining "
+    "companion to funnel_conversion and event_transition_matrix.",
+    tags=("relational", "events", "agg", "topk"),
+)
 
 
 # --------------------------------------------------------------------------
@@ -1528,7 +1479,7 @@ ORDER BY doc_id, metric
     tags=("relational", "unpivot", "projection"),
 )
 def unpivot_doc_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("sales_telegram_bot_data_pipeline_up_docs")
+    documents = table_view(spark, sf_dir, "documents")
     return spark.sql(
         f"""
 WITH wide AS (
@@ -1536,7 +1487,7 @@ WITH wide AS (
          CAST(n_chars AS BIGINT) AS n_chars,
          CAST(size(filter(split(text, '\\\\s+'), t -> t <> '')) AS BIGINT) AS n_words,
          CAST(regexp_count(text, '[0-9]') AS BIGINT) AS n_digits
-  FROM sales_telegram_bot_data_pipeline_up_docs WHERE doc_id % {UNPIVOT_DOC_MOD} = 0
+  FROM {documents} WHERE doc_id % {UNPIVOT_DOC_MOD} = 0
 )
 SELECT doc_id, metric, value
 FROM wide
@@ -1595,19 +1546,13 @@ ORDER BY nat.region, nat.nation
 def share_of_parent_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    for t in ("orders", "customer", "nation", "region"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"sales_telegram_bot_data_pipeline_sr_{t}")
+    views = {t: table_view(spark, sf_dir, t) for t in ("orders", "customer", "nation", "region")}
     # Materialize the 25-row nation-grain aggregate once (guide §3.3):
     # reg/tot plus the final projection expanded it into 24 static corpus
     # scans per statement.  The oracle keeps the single-statement form.
     nat = materialize_once(
         spark,
-        _SHARE_ROLLUP_NAT_SQL.format(
-            orders="sales_telegram_bot_data_pipeline_sr_orders",
-            customer="sales_telegram_bot_data_pipeline_sr_customer",
-            nation="sales_telegram_bot_data_pipeline_sr_nation",
-            region="sales_telegram_bot_data_pipeline_sr_region",
-        ),
+        _SHARE_ROLLUP_NAT_SQL.format(**views),
         "sr_nat",
         key=sf_dir,
     )

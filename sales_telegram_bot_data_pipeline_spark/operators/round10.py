@@ -56,9 +56,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect, strip_order_by
-from ..registry import register
-from ..sources.tables import load_table
-from .curation import _doc_view
+from ..registry import register, register_sql
+from ..sources.tables import table_view
 
 _DAYNO = {
     "spark": "datediff(to_date(o_orderdate), to_date('1970-01-01'))",
@@ -155,9 +154,10 @@ ORDER BY te.source
 """
 
 
-@register(
+register_sql(
     "levene_brown_forsythe",
-    oracle=_levene_sql(DUCKDB, "documents"),
+    _levene_sql,
+    ("documents",),
     doc="Brown-Forsythe homogeneity-of-variance test of doc length "
     "across sources on the BOUNDED (source x n_chars) cell grid: exact "
     "grid medians (2x-scaled so deviations stay integral), per-group "
@@ -165,9 +165,6 @@ ORDER BY te.source
     "variance test beside anova_sources_doclen's mean test.",
     tags=("analytics", "stats", "agg"),
 )
-def levene_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_lev_docs")
-    return spark.sql(_levene_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -202,9 +199,10 @@ FROM agg a CROSS JOIN thresh t
 """
 
 
-@register(
+register_sql(
     "hill_tail_index",
-    oracle=_hill_sql(DUCKDB, "orders"),
+    _hill_sql,
+    ("orders",),
     doc=f"Hill estimator of the Pareto tail exponent of order values "
     f"over the top-{_HILL_K} order statistics: one TakeOrdered "
     f"LIMIT-{_HILL_K + 1} pass (never a global sort — the rank window "
@@ -214,9 +212,6 @@ FROM agg a CROSS JOIN thresh t
     "statistics tail estimator beside mean_excess_tail_audit (POT).",
     tags=("analytics", "stats", "evt", "topk"),
 )
-def hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_hill_o")
-    return spark.sql(_hill_sql(SPARK, "sales_telegram_bot_data_pipeline_hill_o"))
 
 
 # --------------------------------------------------------------------------
@@ -291,9 +286,10 @@ ORDER BY g.seg
 """
 
 
-@register(
+register_sql(
     "theil_inequality_decomposition",
-    oracle=_theil_sql(DUCKDB, "orders", "customer"),
+    _theil_sql,
+    ("orders", "customer"),
     doc="Theil T inequality of order revenue by market segment with the "
     "exact within/between decomposition (T = sum s_g T_g + T_between): "
     "per-row x ln x terms nano-quantized before any cross-partition "
@@ -302,12 +298,6 @@ ORDER BY g.seg
     "(Gini, which cannot split within/between).",
     tags=("analytics", "stats", "agg"),
 )
-def theil_inequality_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_th_o")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_th_c")
-    return spark.sql(
-        _theil_sql(SPARK, "sales_telegram_bot_data_pipeline_th_o", "sales_telegram_bot_data_pipeline_th_c")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -381,9 +371,10 @@ FROM fit
 """
 
 
-@register(
+register_sql(
     "granger_lag_causality",
-    oracle=_granger_sql(DUCKDB, "orders"),
+    _granger_sql,
+    ("orders",),
     doc="Granger causality (lag 1) of daily order count on daily "
     "revenue: restricted vs unrestricted OLS on the aggregated day "
     "grid, lag via the exact day+1 self-join (adf pattern), RSS in "
@@ -393,9 +384,6 @@ FROM fit
     "acf/adf/naive-forecast.",
     tags=("analytics", "timeseries", "stats"),
 )
-def granger_lag_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_gr_o")
-    return spark.sql(_granger_sql(SPARK, "sales_telegram_bot_data_pipeline_gr_o"))
 
 
 # --------------------------------------------------------------------------
@@ -454,9 +442,10 @@ FROM tot t CROSS JOIN agg a
 """
 
 
-@register(
+register_sql(
     "ljung_box_whiteness",
-    oracle=_ljung_box_sql(DUCKDB, "orders"),
+    _ljung_box_sql,
+    ("orders",),
     doc=f"Ljung-Box portmanteau whiteness test of daily revenue over "
     f"lags 1..{_LB_LAGS}: each autocorrelation from the exact "
     "scaled-deviation sums (acf pattern — day-domain self-join, never a "
@@ -465,9 +454,6 @@ FROM tot t CROSS JOIN agg a
     "serial-correlation test beside acf (per-lag) and adf (unit root).",
     tags=("analytics", "timeseries", "stats"),
 )
-def ljung_box_whiteness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_lb_o")
-    return spark.sql(_ljung_box_sql(SPARK, "sales_telegram_bot_data_pipeline_lb_o"))
 
 
 # --------------------------------------------------------------------------
@@ -532,7 +518,7 @@ FROM m CROSS JOIN nn
 def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import _lsh_pairs_view
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(
         _assortativity_sql(SPARK, view, pairs_rel=_lsh_pairs_view(spark, sf_dir))
     )
@@ -638,7 +624,7 @@ LIMIT {_AA_TOPK}
 def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import session_view
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     # the loose candidate graph is a stored session relation, like the
     # strict pair graph every other graph consumer reads
     pairs = session_view(
@@ -749,9 +735,10 @@ FROM agg a
 """
 
 
-@register(
+register_sql(
     "logrank_test_segments",
-    oracle=_logrank_sql(DUCKDB, "orders", "customer"),
+    _logrank_sql,
+    ("orders", "customer"),
     doc="Two-group logrank test (BUILDING segment vs rest) of the "
     "repurchase survival curves — the SIGNIFICANCE test beside "
     "kaplan_meier_repurchase (estimator), nelson_aalen_hazard "
@@ -762,12 +749,6 @@ FROM agg a
     "3.841e0.",
     tags=("evaluation", "survival", "stats"),
 )
-def logrank_test_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_lr_o")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_lr_c")
-    return spark.sql(
-        _logrank_sql(SPARK, "sales_telegram_bot_data_pipeline_lr_o", "sales_telegram_bot_data_pipeline_lr_c")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -837,9 +818,10 @@ LIMIT {_QL_TOPK}
 """
 
 
-@register(
+register_sql(
     "query_likelihood_dirichlet",
-    oracle=_ql_sql(DUCKDB, "documents"),
+    _ql_sql,
+    ("documents",),
     doc=f"Query-likelihood retrieval with Dirichlet smoothing (mu = "
     f"{_QL_MU}), top-{_QL_TOPK}: the language-modeling ranker beside "
     "BM25 (tf saturation) and the RRF/dense arms — candidates are docs "
@@ -849,9 +831,6 @@ LIMIT {_QL_TOPK}
     "integer-ordered top-k.",
     tags=("retrieval", "text", "topk"),
 )
-def query_likelihood_dirichlet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_ql_docs")
-    return spark.sql(_ql_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -883,9 +862,10 @@ FROM agg a
 """
 
 
-@register(
+register_sql(
     "mrr_retrieval_eval",
-    oracle=_mrr_sql(DUCKDB, "documents"),
+    _mrr_sql,
+    ("documents",),
     doc="Reciprocal rank and success@5/10 of the BM25 ranking against "
     "the graded relevance labels (ndcg_retrieval_eval's rel case): the "
     "first-hit IR metric completing the eval triangle beside nDCG "
@@ -893,9 +873,6 @@ FROM agg a
     "window runs on the LIMIT-25 BM25 sublist, never the corpus.",
     tags=("evaluation", "retrieval", "stats"),
 )
-def mrr_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_mrr_docs")
-    return spark.sql(_mrr_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -924,9 +901,10 @@ ORDER BY doc_id
 """
 
 
-@register(
+register_sql(
     "curriculum_schedule_plan",
-    oracle=_curriculum_sql(DUCKDB, "documents"),
+    _curriculum_sql,
+    ("documents",),
     doc=f"Curriculum training schedule: docs band into {_CURR_BANDS} "
     "equi-width difficulty bands by length (shorter = easier first, the "
     "standard length-based curriculum), band b enters the mix at epoch "
@@ -936,9 +914,6 @@ ORDER BY doc_id
     "against a one-row bounds scalar; no shuffle beyond the scan.",
     tags=("curation", "sampling", "plan"),
 )
-def curriculum_schedule_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_curr_docs")
-    return spark.sql(_curriculum_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -1009,9 +984,10 @@ ORDER BY s.stratum
 """
 
 
-@register(
+register_sql(
     "ipw_ate_stratified",
-    oracle=_ipw_sql(DUCKDB, "events"),
+    _ipw_sql,
+    ("events",),
     doc=f"Stratified average-treatment-effect estimator: users hash-"
     f"assign to arms (portable salted md5 bit — deterministic, no RNG), "
     f"stratify into {_IPW_STRATA} activity bands by the exact integer "
@@ -1022,6 +998,3 @@ ORDER BY s.stratum
     "snips (off-policy reweighting).",
     tags=("analytics", "causal", "experiment"),
 )
-def ipw_ate_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ipw_ev")
-    return spark.sql(_ipw_sql(SPARK, "sales_telegram_bot_data_pipeline_ipw_ev"))

@@ -51,9 +51,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
-from ..sources.tables import load_table
-from .curation import _doc_view
+from ..registry import register, register_sql
+from ..sources.tables import table_view
 
 _CENTS = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
 _DAYNO = {
@@ -112,9 +111,10 @@ FROM fit
 """
 
 
-@register(
+register_sql(
     "gumbel_block_maxima_fit",
-    oracle=_gumbel_sql(DUCKDB, "orders"),
+    _gumbel_sql,
+    ("orders",),
     doc="Gumbel fit of monthly block maxima of daily revenue by method "
     "of moments (Euler-Mascheroni and sqrt(6)/pi as literals — no libm "
     "beyond one SQRT/LN on the one-row fit), variance via the n-scaled "
@@ -123,9 +123,6 @@ FROM fit
     "stats).  Two bounded aggregations: day grid, then month grid.",
     tags=("analytics", "evt", "timeseries"),
 )
-def gumbel_block_maxima_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_gb_o")
-    return spark.sql(_gumbel_sql(SPARK, "sales_telegram_bot_data_pipeline_gb_o"))
 
 
 # --------------------------------------------------------------------------
@@ -187,9 +184,10 @@ ORDER BY c.event_type
 """
 
 
-@register(
+register_sql(
     "friedman_rank_test",
-    oracle=_friedman_sql(DUCKDB, "events"),
+    _friedman_sql,
+    ("events",),
     doc="Tie-corrected Friedman test of whether the five event types "
     "keep a consistent daily volume ordering (blocks = days, "
     "treatments = types): 2x-scaled tie-averaged ranks keep the whole "
@@ -200,9 +198,6 @@ ORDER BY c.event_type
     "kendall_tau_b (pairwise).",
     tags=("analytics", "stats", "agg"),
 )
-def friedman_rank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_fr_ev")
-    return spark.sql(_friedman_sql(SPARK, "sales_telegram_bot_data_pipeline_fr_ev"))
 
 
 # --------------------------------------------------------------------------
@@ -256,9 +251,10 @@ FROM fin
 """
 
 
-@register(
+register_sql(
     "cramers_v_bias_corrected",
-    oracle=_cramers_sql(DUCKDB, "orders"),
+    _cramers_sql,
+    ("orders",),
     doc="Cramer's V effect size of the order-priority x order-status "
     "association, plain and Bergsma bias-corrected: the corpus "
     "collapses to the bounded 5x3 contingency grid in one map-side-"
@@ -268,9 +264,6 @@ FROM fin
     "counts — everything is 'significant'; V says whether it matters).",
     tags=("analytics", "stats", "agg"),
 )
-def cramers_v_bias_corrected(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_cv_o")
-    return spark.sql(_cramers_sql(SPARK, "sales_telegram_bot_data_pipeline_cv_o"))
 
 
 # --------------------------------------------------------------------------
@@ -336,7 +329,7 @@ LIMIT {_KATZ_TOPK}
 def katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import _lsh_pairs_view
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(_katz_sql(SPARK, view, pairs_rel=_lsh_pairs_view(spark, sf_dir)))
 
 
@@ -387,9 +380,10 @@ ORDER BY n_occurrences DESC, motif
 """
 
 
-@register(
+register_sql(
     "sax_daily_revenue_motifs",
-    oracle=_sax_sql(DUCKDB, "orders"),
+    _sax_sql,
+    ("orders",),
     doc="SAX symbolic discretization of daily revenue (4-symbol "
     "alphabet, standard N(0,1) quartile breakpoints as literals, "
     "z-scores from exact cancellation-free moment sums) with 3-day "
@@ -399,9 +393,6 @@ ORDER BY n_occurrences DESC, motif
     "primitive under motif/discord mining).",
     tags=("analytics", "timeseries", "agg"),
 )
-def sax_daily_revenue_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_sax_o")
-    return spark.sql(_sax_sql(SPARK, "sales_telegram_bot_data_pipeline_sax_o"))
 
 
 # --------------------------------------------------------------------------
@@ -455,9 +446,10 @@ FROM tot t CROSS JOIN agg a
 """
 
 
-@register(
+register_sql(
     "mutual_information_source_lang",
-    oracle=_mi_sql(DUCKDB, "documents"),
+    _mi_sql,
+    ("documents",),
     doc="Mutual information and symmetric NMI of the (source, lang) "
     "pairing: the corpus collapses to the bounded contingency grid in "
     "one groupBy, per-cell p*ln terms nano-quantized before the grid "
@@ -466,9 +458,6 @@ FROM tot t CROSS JOIN agg a
     "chi_squared_independence's yes/no.",
     tags=("analytics", "stats", "text"),
 )
-def mutual_information_source_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_mi_docs")
-    return spark.sql(_mi_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -496,9 +485,10 @@ ORDER BY g.source
 """
 
 
-@register(
+register_sql(
     "loso_source_influence",
-    oracle=_loso_sql(DUCKDB, "documents"),
+    _loso_sql,
+    ("documents",),
     doc="Leave-one-source-out influence of each source on the corpus "
     "mean doc length: delta = mean_all - mean_without_source, every "
     "contrast from ONE pass of exact integer sums (never a per-source "
@@ -508,9 +498,6 @@ ORDER BY g.source
     "screen before influence functions.",
     tags=("curation", "audit", "agg"),
 )
-def loso_source_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_lo_docs")
-    return spark.sql(_loso_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -654,10 +641,10 @@ def hilbert_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bits = 8
     grid = 1 << bits
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_hi_o")
+    orders = table_view(spark, sf_dir, "orders")
     base = spark.sql(
         f"""
-WITH base AS ({_zorder_base_sql(SPARK, "sales_telegram_bot_data_pipeline_hi_o")})
+WITH base AS ({_zorder_base_sql(SPARK, orders)})
 SELECT okey, bx, by, z, {_hilbert_fold_expr(bits)} AS hd FROM base
 """
     ).localCheckpoint()
@@ -793,9 +780,10 @@ ORDER BY bucket
 """
 
 
-@register(
+register_sql(
     "bucketed_packing_plan",
-    oracle=_bucketed_packing_sql(DUCKDB, "documents"),
+    _bucketed_packing_sql,
+    ("documents",),
     doc=f"Whole-document length-bucket packing plan ({_PACK_CAP}-token "
     "bins, power-of-two buckets): docs route to hash shards sized "
     f"~{_PACK_SHARD_DOCS} docs (shard count scales with the corpus), "
@@ -808,6 +796,3 @@ ORDER BY bucket
     "padding_waste_audit measures for the naive loader.",
     tags=("curation", "packing", "plan"),
 )
-def bucketed_packing_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_bp_docs")
-    return spark.sql(_bucketed_packing_sql(SPARK, view))

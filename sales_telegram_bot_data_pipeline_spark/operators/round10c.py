@@ -35,8 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect, strip_order_by
-from ..registry import register
-from ..sources.tables import load_table
+from ..registry import register, register_sql
+from ..sources.tables import table_view
 
 _LN19 = "2.9444389791664403e0"  # ln(19): Wald bounds for alpha=beta=0.05
 _LN105 = "0.04879016416943205e0"  # ln(1.05)
@@ -143,8 +143,8 @@ FROM {events} GROUP BY user_id
 def qini_uplift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scalars_extra import range_ranked
 
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_qn_ev")
-    users = spark.sql(_qini_users_sql(SPARK, "sales_telegram_bot_data_pipeline_qn_ev")).withColumn(
+    events = table_view(spark, sf_dir, "events")
+    users = spark.sql(_qini_users_sql(SPARK, events)).withColumn(
         "neg_ev", -F.col("n_ev")
     )
     ranked, _ = range_ranked(spark, users, ["neg_ev", "user_id"])
@@ -241,10 +241,10 @@ t AS (
 def sprt_poisson_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scalars_extra import range_prefix_summed
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_sp_o")
+    orders = table_view(spark, sf_dir, "orders")
     dayno = "datediff(to_date(o_orderdate), to_date('1970-01-01'))"
     daily = spark.sql(
-        _SPRT_DAILY.format(dayno=dayno, orders="sales_telegram_bot_data_pipeline_sp_o")
+        _SPRT_DAILY.format(dayno=dayno, orders=orders)
     ).localCheckpoint(eager=False)
     daily.createOrReplaceTempView("sales_telegram_bot_data_pipeline_sp_daily")
     inc = spark.sql(
@@ -336,9 +336,10 @@ ORDER BY r.source
 """
 
 
-@register(
+register_sql(
     "beta_binomial_shrinkage",
-    oracle=_betabin_sql(DUCKDB, "documents"),
+    _betabin_sql,
+    ("documents",),
     doc="Empirical-Bayes Beta-Binomial shrinkage of per-source English "
     "rates: method-of-moments (alpha, beta) from the k per-source rates "
     "(nano-quantized before the bounded moment sums; prior strength "
@@ -348,11 +349,6 @@ ORDER BY r.source
     "RATE analogue of james_stein_shrinkage (normal means).",
     tags=("analytics", "stats", "agg"),
 )
-def beta_binomial_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .curation import _doc_view
-
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_bb_docs")
-    return spark.sql(_betabin_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -407,7 +403,6 @@ FROM s
     tags=("dedup", "audit", "stats"),
 )
 def capture_recapture_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .curation import _doc_view
     from .dedup import (
         _jaccard_stopshingle_sql,
         _lsh_pairs_view,
@@ -416,7 +411,7 @@ def capture_recapture_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         session_view,
     )
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     lsh = _lsh_pairs_view(spark, sf_dir)
     # stop-shingle pairs as a stored session relation built from the
     # shared shingle/df views (the twin stays live-measured by its op)

@@ -34,9 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
-from ..sources.tables import load_table
-from .curation import _doc_view
+from ..registry import register, register_sql
+from ..sources.tables import table_view
 
 
 # --------------------------------------------------------------------------
@@ -112,9 +111,10 @@ ORDER BY gg.source
 """
 
 
-@register(
+register_sql(
     "kruskal_wallis_doclen",
-    oracle=_kruskal_sql(DUCKDB, "documents"),
+    _kruskal_sql,
+    ("documents",),
     doc="Tie-corrected Kruskal-Wallis k-sample rank test of doc length "
     "across sources: global tie-averaged ranks in 2x-scaled exact "
     "integers from the bounded value grid's triangular cumulative "
@@ -124,9 +124,6 @@ ORDER BY gg.source
     "rank test beside friedman (blocked) and ranksum (two-sample).",
     tags=("analytics", "stats", "agg"),
 )
-def kruskal_wallis_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_kw_docs")
-    return spark.sql(_kruskal_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -269,7 +266,7 @@ FROM tot t CROSS JOIN mlo ml CROSS JOIN mhi mh
 def hodges_lehmann_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_hl_docs")
+    view = table_view(spark, sf_dir, "documents")
     dgrid = materialize_once(spark, _hl_diffs_sql(SPARK, view), "hl_diffs", key=sf_dir)
     return spark.sql(_hl_sql(SPARK, view, diffs_rel=f"SELECT * FROM {dgrid}"))
 
@@ -320,9 +317,10 @@ ORDER BY c.s
 """
 
 
-@register(
+register_sql(
     "cochran_armitage_trend",
-    oracle=_catrend_sql(DUCKDB, "orders"),
+    _catrend_sql,
+    ("orders",),
     doc="Cochran-Armitage test for a linear trend in order-fulfillment "
     "rate across the five ORDERED priority levels (scores parsed from "
     "the priority prefix): one map-side-combinable groupBy to the "
@@ -331,9 +329,6 @@ ORDER BY c.s
     "beside chi_squared_independence (which ignores the ordering).",
     tags=("analytics", "stats", "agg"),
 )
-def cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ca_o")
-    return spark.sql(_catrend_sql(SPARK, "sales_telegram_bot_data_pipeline_ca_o"))
 
 
 # --------------------------------------------------------------------------
@@ -396,9 +391,10 @@ ORDER BY t.stratum
 """
 
 
-@register(
+register_sql(
     "mantel_haenszel_or",
-    oracle=_mh_sql(DUCKDB, "orders", "customer"),
+    _mh_sql,
+    ("orders", "customer"),
     doc="Mantel-Haenszel pooled odds ratio and CMH chi-squared of "
     "(hash-assigned exposure) x (order fulfilled) across market-"
     "segment strata: one groupBy to the bounded 5x2x2 table, "
@@ -408,9 +404,3 @@ ORDER BY t.stratum
     "stratified analysis reports together.",
     tags=("analytics", "causal", "stats"),
 )
-def mantel_haenszel_or(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_mh_o")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_mh_c")
-    return spark.sql(
-        _mh_sql(SPARK, "sales_telegram_bot_data_pipeline_mh_o", "sales_telegram_bot_data_pipeline_mh_c")
-    )

@@ -28,9 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
-from ..sources.tables import load_table
-from .curation import _doc_view
+from ..registry import register, register_sql
+from ..sources.tables import table_view
 
 _CENTS = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
 _DAYNO = {
@@ -97,9 +96,10 @@ CROSS JOIN tot t
 """
 
 
-@register(
+register_sql(
     "binary_segmentation_split",
-    oracle=_binseg_sql(DUCKDB, "orders"),
+    _binseg_sql,
+    ("orders",),
     doc="Single-changepoint location by binary segmentation on daily "
     "revenue: between-segment sum of squares per candidate split from "
     "exact prefix sums (triangular join on the bounded day grid), "
@@ -110,9 +110,6 @@ CROSS JOIN tot t
     "algorithm.",
     tags=("analytics", "timeseries", "changepoint"),
 )
-def binary_segmentation_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_bs_o")
-    return spark.sql(_binseg_sql(SPARK, "sales_telegram_bot_data_pipeline_bs_o"))
 
 
 # --------------------------------------------------------------------------
@@ -160,9 +157,10 @@ FROM tot t CROSS JOIN agg a
 """
 
 
-@register(
+register_sql(
     "markov_entropy_rate",
-    oracle=_entropy_rate_sql(DUCKDB, "events"),
+    _entropy_rate_sql,
+    ("events",),
     doc="Entropy rate H(next|current) of the user event-type Markov "
     "chain over the bounded transition grid (LEAD window per user — "
     "user_id is the natural parallel unit), per-cell p*ln terms "
@@ -173,9 +171,6 @@ FROM tot t CROSS JOIN agg a
     "markov_stationary_distribution.",
     tags=("analytics", "markov", "stats"),
 )
-def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_er_ev")
-    return spark.sql(_entropy_rate_sql(SPARK, "sales_telegram_bot_data_pipeline_er_ev"))
 
 
 # --------------------------------------------------------------------------
@@ -253,7 +248,7 @@ def cramer_von_mises_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
     from .round10d import _src2_cells_sql
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_cvm_docs")
+    view = table_view(spark, sf_dir, "documents")
     # Materialize the side-tagged two-source value grid once (guide §3.3):
     # na/nb/pooled/cum/terms plus the lo/hi scalar subqueries expanded it
     # into 36 static corpus scans per statement.

@@ -25,8 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
-from .curation import _doc_view
+from ..registry import register, register_sql
+from ..sources.tables import table_view
 
 
 # --------------------------------------------------------------------------
@@ -62,9 +62,10 @@ FROM na n1 CROSS JOIN nb n2 CROSS JOIN u
 """
 
 
-@register(
+register_sql(
     "cles_effect_size",
-    oracle=_cles_sql(DUCKDB, "documents"),
+    _cles_sql,
+    ("documents",),
     doc="Common-language effect size (Vargha-Delaney A = P(X>Y) + "
     "0.5 P(X=Y)) between the two lexicographically-first sources' doc "
     "lengths: win/tie pair mass on the bounded |V|x|V| count-product "
@@ -73,9 +74,6 @@ FROM na n1 CROSS JOIN nb n2 CROSS JOIN u
     "(reject), Hodges-Lehmann (shift), and ranksum (ordering).",
     tags=("analytics", "stats", "agg"),
 )
-def cles_effect_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_cl_docs")
-    return spark.sql(_cles_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -130,7 +128,7 @@ def hellinger_bhattacharyya(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
     from .round10d import _src2_cells_sql
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_hb_docs")
+    view = table_view(spark, sf_dir, "documents")
     # Materialize the side-tagged two-source value grid once (guide §3.3):
     # na/nb/terms plus the lo/hi scalar subqueries expanded it into 28
     # static corpus scans per statement.
@@ -189,9 +187,10 @@ ORDER BY g.bin
 """
 
 
-@register(
+register_sql(
     "expected_calibration_error",
-    oracle=_ece_sql(DUCKDB, "documents"),
+    _ece_sql,
+    ("documents",),
     doc="Expected and maximum calibration error (ECE/MCE) of the logreg "
     "quality probability vs the lang='en' label over 10 decile bins: "
     "per-bin |accuracy - confidence| from exact micro-unit integer "
@@ -201,6 +200,3 @@ ORDER BY g.bin
     "(brier), fit (isotonic), and test (spiegelhalter).",
     tags=("evaluation", "calibration", "stats"),
 )
-def expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_ece_docs")
-    return spark.sql(_ece_sql(SPARK, view))

@@ -48,18 +48,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
-from ..sources.tables import load_table
+from ..registry import register, register_sql
+from ..sources.tables import load_table, table_view
 
 # --------------------------------------------------------------------------
 # exact dyadic EWMA over weekly revenue
 # --------------------------------------------------------------------------
 EWMA_DEPTH = 20  # 2^-20 tail mass ~1e-6: numerically invisible after ROUND 6
-
-_EPOCH_DIFF = {
-    "spark": "datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-    "duckdb": "datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))",
-}
 
 
 def _shl(d: Dialect, n: str) -> str:
@@ -82,7 +77,7 @@ def _ewma_sql(d: Dialect, orders: str, weekly_rel: str | None = None) -> str:
     w_num = _shl(d, f"{D} - CAST(a.x - b.x AS INT)")
     den = f"({_shl(d, str(D + 1))} - {_shl(d, f'{D} - m')})"
     weekly = weekly_rel or _EWMA_WEEKLY_SQL.format(
-        epoch_diff=_EPOCH_DIFF[d.name], orders=orders
+        epoch_diff=d.days_since("o_orderdate"), orders=orders
     )
     return f"""
 WITH weekly AS ({weekly}),
@@ -124,16 +119,16 @@ ORDER BY week
     tags=("analytics", "timeseries", "exact"),
 )
 def ewma_dyadic_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ewma_o")
+    orders = table_view(spark, sf_dir, "orders")
     # weekly feeds THREE consumers (w0 + both band-join sides): Spark
     # inlines CTEs, so materialize the orders scan+aggregate once
     spark.sql(
         _EWMA_WEEKLY_SQL.format(
-            epoch_diff=_EPOCH_DIFF["spark"], orders="sales_telegram_bot_data_pipeline_ewma_o"
+            epoch_diff=SPARK.days_since("o_orderdate"), orders=orders
         )
     ).localCheckpoint(eager=False).createOrReplaceTempView("sales_telegram_bot_data_pipeline_ewma_w")
     return spark.sql(
-        _ewma_sql(SPARK, "sales_telegram_bot_data_pipeline_ewma_o",
+        _ewma_sql(SPARK, orders,
                   weekly_rel="SELECT x, cents FROM sales_telegram_bot_data_pipeline_ewma_w")
     )
 
@@ -147,7 +142,7 @@ def _seasonal_sql(d: Dialect, orders: str) -> str:
     # 0=Sunday..6 identically in both (1970-01-01 was a Thursday).
     return f"""
 WITH daily AS (
-  SELECT CAST({_EPOCH_DIFF[d.name]} AS BIGINT) AS day_x,
+  SELECT CAST({d.days_since('o_orderdate')} AS BIGINT) AS day_x,
          CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
               AS BIGINT) AS cents
   FROM {orders} GROUP BY 1
@@ -182,9 +177,10 @@ ORDER BY b.dow
 """
 
 
-@register(
+register_sql(
     "seasonal_dow_decomposition",
-    oracle=_seasonal_sql(DUCKDB, "orders"),
+    _seasonal_sql,
+    ("orders",),
     doc="Additive day-of-week seasonal decomposition of daily revenue: "
     "per-dow mean level, seasonal index (dow mean / global mean) and the "
     "seasonality STRENGTH (1 - SS_residual/SS_total — variance explained "
@@ -196,9 +192,6 @@ ORDER BY b.dow
     "circular_time_profile (phase).",
     tags=("analytics", "timeseries", "agg"),
 )
-def seasonal_dow_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_seas_o")
-    return spark.sql(_seasonal_sql(SPARK, "sales_telegram_bot_data_pipeline_seas_o"))
 
 
 # --------------------------------------------------------------------------
@@ -223,7 +216,7 @@ def _runs_oracle() -> str:
     d = DUCKDB
     return f"""
 WITH daily AS (
-  SELECT CAST({_EPOCH_DIFF[d.name]} AS BIGINT) AS day_x,
+  SELECT CAST({d.days_since('o_orderdate')} AS BIGINT) AS day_x,
          CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
               AS BIGINT) AS cents
   FROM orders GROUP BY 1
@@ -266,13 +259,13 @@ s AS (
 def runs_test_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scalars_extra import range_ranked
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_runs_o")
+    orders = table_view(spark, sf_dir, "orders")
     d = SPARK
     daily = spark.sql(f"""
-SELECT CAST({_EPOCH_DIFF[d.name]} AS BIGINT) AS day_x,
+SELECT CAST({d.days_since('o_orderdate')} AS BIGINT) AS day_x,
        CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
             AS BIGINT) AS cents
-FROM sales_telegram_bot_data_pipeline_runs_o GROUP BY 1
+FROM {orders} GROUP BY 1
 """)
     ranked, n = range_ranked(spark, daily, ["day_x"])
     if ranked is None:
@@ -404,9 +397,10 @@ FROM err
 """
 
 
-@register(
+register_sql(
     "jl_projection_distortion_audit",
-    oracle=_jl_sql(DUCKDB, "embeddings"),
+    _jl_sql,
+    ("embeddings",),
     doc=f"Johnson–Lindenstrauss ±1 sign-projection distortion audit "
     f"(d={JL_DIM} -> k={JL_K}): squared-distance ratio (proj/k — the "
     "unbiased estimator for a ±1 sign matrix) vs the exact distance "
@@ -422,10 +416,6 @@ FROM err
     "matryoshka_recall_audit (prefix truncation).",
     tags=("similarity", "audit", "sketch"),
 )
-def jl_projection_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import _emb_view
-
-    return spark.sql(_jl_sql(SPARK, _emb_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_jl_emb")))
 
 
 # --------------------------------------------------------------------------
@@ -474,13 +464,13 @@ _COVIS_UT_SQL = "SELECT DISTINCT user_id, event_type FROM {events}"
     tags=("analytics", "graph", "self-join"),
 )
 def covisitation_item_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_cov_ev")
+    events = table_view(spark, sf_dir, "events")
     # the distinct incidence relation feeds FOUR consumers (margins, the
     # user count, both pair-join sides): materialize the events
     # scan+DISTINCT once — at 100 TB re-deriving it per consumer is the
     # dominant cost, not the bounded |catalog|^2 tail
     spark.sql(
-        _COVIS_UT_SQL.format(events="sales_telegram_bot_data_pipeline_cov_ev")
+        _COVIS_UT_SQL.format(events=events)
     ).localCheckpoint(eager=False).createOrReplaceTempView("sales_telegram_bot_data_pipeline_cov_ut")
     return spark.sql(
         _COVIS_SQL.format(incidence="SELECT user_id, event_type FROM sales_telegram_bot_data_pipeline_cov_ut")
@@ -563,7 +553,7 @@ def key_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 def _backtest_sql(d: Dialect, orders: str, daily_rel: str | None = None) -> str:
     daily = daily_rel or f"""
-  SELECT CAST({_EPOCH_DIFF[d.name]} AS BIGINT) AS day_x,
+  SELECT CAST({d.days_since('o_orderdate')} AS BIGINT) AS day_x,
          CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
               AS BIGINT) AS cents
   FROM {orders} GROUP BY 1
@@ -616,17 +606,17 @@ FROM scored CROSS JOIN tot t2
     tags=("analytics", "timeseries", "evaluation"),
 )
 def naive_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_bt_o")
+    orders = table_view(spark, sf_dir, "orders")
     # daily feeds four consumers (tot + three join sides): materialize once
     spark.sql(f"""
-SELECT CAST({_EPOCH_DIFF['spark']} AS BIGINT) AS day_x,
+SELECT CAST({SPARK.days_since('o_orderdate')} AS BIGINT) AS day_x,
        CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
             AS BIGINT) AS cents
-FROM sales_telegram_bot_data_pipeline_bt_o GROUP BY 1
+FROM {orders} GROUP BY 1
 """).localCheckpoint(eager=False).createOrReplaceTempView("sales_telegram_bot_data_pipeline_bt_d")
     return spark.sql(
         _backtest_sql(
-            SPARK, "sales_telegram_bot_data_pipeline_bt_o",
+            SPARK, orders,
             daily_rel="SELECT day_x, cents FROM sales_telegram_bot_data_pipeline_bt_d",
         )
     )
@@ -703,9 +693,10 @@ ORDER BY source_a, source_b
 """
 
 
-@register(
+register_sql(
     "stylometric_burrows_delta",
-    oracle=_burrows_sql(DUCKDB, "documents"),
+    _burrows_sql,
+    ("documents",),
     doc=f"Burrows' Delta (the standard stylometric / authorship distance) "
     f"between every source pair: the {DELTA_TOP_WORDS} corpus-wide most "
     "frequent words (deterministic count-desc, word-asc TakeOrdered) "
@@ -723,11 +714,6 @@ ORDER BY source_a, source_b
     "welch_ttest_sources (length) and anova_sources_doclen (variance).",
     tags=("textops", "stats", "stylometry"),
 )
-def stylometric_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .curation import _doc_view
-
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_bd_docs")
-    return spark.sql(_burrows_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -770,9 +756,10 @@ GROUP BY 1 ORDER BY entropy_bucket
 """
 
 
-@register(
+register_sql(
     "behavioral_entropy_profile",
-    oracle=_entropy_sql(DUCKDB, "events"),
+    _entropy_sql,
+    ("events",),
     doc="Per-user behavioral diversity: Shannon entropy (nats) of each "
     "user's event-type distribution, profiled as a 0.25-nat histogram "
     "(bots and single-action users pool at 0; engaged users approach "
@@ -785,9 +772,6 @@ GROUP BY 1 ORDER BY entropy_bucket
     "user_cadence_profile (timing).",
     tags=("analytics", "stats", "entropy"),
 )
-def behavioral_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ent_ev")
-    return spark.sql(_entropy_sql(SPARK, "sales_telegram_bot_data_pipeline_ent_ev"))
 
 
 # --------------------------------------------------------------------------
@@ -875,9 +859,10 @@ ORDER BY c.channel
 """
 
 
-@register(
+register_sql(
     "shapley_channel_attribution",
-    oracle=_shapley_sql(DUCKDB, "events"),
+    _shapley_sql,
+    ("events",),
     doc="EXACT Shapley-value conversion attribution over the bounded "
     f"channel catalog {SHAPLEY_CHANNELS}: each user collapses to an "
     "exposure BITMASK + converted flag (one groupBy), coalitions to "
@@ -892,9 +877,6 @@ ORDER BY c.channel
     "the per-user groupBy is O(2^n) bounded.",
     tags=("analytics", "attribution", "agg"),
 )
-def shapley_channel_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_shp_ev")
-    return spark.sql(_shapley_sql(SPARK, "sales_telegram_bot_data_pipeline_shp_ev"))
 
 
 # --------------------------------------------------------------------------
@@ -979,10 +961,9 @@ qh AS (SELECT MIN(s_u) AS q_u FROM calr CROSS JOIN kk WHERE cum >= kk.k)
     tags=("evaluation", "stats", "distributed-rank"),
 )
 def conformal_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .curation import _doc_view
     from .scalars_extra import range_prefix_summed
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_conf_docs")
+    view = table_view(spark, sf_dir, "documents")
     sc = spark.sql(_conformal_scored_sql(SPARK, view)).localCheckpoint(eager=False)
     sc.createOrReplaceTempView("sales_telegram_bot_data_pipeline_conf_sc")
     calg = (
@@ -1049,9 +1030,10 @@ ORDER BY source_a, source_b
 """
 
 
-@register(
+register_sql(
     "source_vocab_overlap",
-    oracle=_vocab_overlap_sql(DUCKDB, "documents"),
+    _vocab_overlap_sql,
+    ("documents",),
     doc="Lexical type-level overlap matrix between sources: distinct "
     "(source, word-hash) incidence, per-word inverted self-join "
     "(fan-out bounded by sources-per-word <= |sources|), Jaccard + "
@@ -1064,11 +1046,6 @@ ORDER BY source_a, source_b
     "diminishing-returns curve.",
     tags=("textops", "dedup", "self-join"),
 )
-def source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .curation import _doc_view
-
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_svo_docs")
-    return spark.sql(_vocab_overlap_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -1129,9 +1106,10 @@ GROUP BY t.n, t.syt, t.sqt
 """
 
 
-@register(
+register_sql(
     "brier_score_decomposition",
-    oracle=_brier_sql(DUCKDB, "documents"),
+    _brier_sql,
+    ("documents",),
     doc="Brier score of the quality classifier against the lang='en' "
     "label with the GENERALIZED Murphy decomposition: reliability "
     "(calibration badness), resolution (discrimination), uncertainty "
@@ -1147,11 +1125,6 @@ GROUP BY t.n, t.syt, t.sqt
     "roc_auc_quality_score (ranking).",
     tags=("evaluation", "stats", "calibration"),
 )
-def brier_score_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .curation import _doc_view
-
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_brier_docs")
-    return spark.sql(_brier_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -1196,9 +1169,10 @@ FROM pairs p CROSS JOIN tot t CROSS JOIN margx mx CROSS JOIN margy my
 """
 
 
-@register(
+register_sql(
     "kendall_tau_b",
-    oracle=_kendall_sql(DUCKDB, "lineitem"),
+    _kendall_sql,
+    ("lineitem",),
     doc="Kendall tau-b rank correlation (tie-corrected) of l_quantity vs "
     "l_discount, computed from the BOUNDED contingency grid: the corpus "
     "collapses to |qty| x |discount| cells in one map-combinable "
@@ -1214,6 +1188,3 @@ FROM pairs p CROSS JOIN tot t CROSS JOIN margx mx CROSS JOIN margy my
     "axis instead).",
     tags=("analytics", "stats", "agg"),
 )
-def kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_kt_li")
-    return spark.sql(_kendall_sql(SPARK, "sales_telegram_bot_data_pipeline_kt_li"))

@@ -53,13 +53,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
-from ..sources.tables import load_table
-
-_EPOCH_DIFF = {
-    "spark": "datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-    "duckdb": "datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))",
-}
+from ..registry import register, register_sql
+from ..sources.tables import table_view
 
 
 def _orders_base(d: Dialect, orders: str) -> str:
@@ -72,7 +67,7 @@ def _orders_base(d: Dialect, orders: str) -> str:
     return f"""
 SELECT o_custkey AS cust,
        CAST({h} % 2 AS INT) AS treat,
-       CAST({_EPOCH_DIFF[d.name]} AS BIGINT) AS day_x,
+       CAST({d.days_since('o_orderdate')} AS BIGINT) AS day_x,
        CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
 FROM {orders}
 """
@@ -169,9 +164,10 @@ FROM scal
 """
 
 
-@register(
+register_sql(
     "cuped_variance_reduction",
-    oracle=_cuped_sql(DUCKDB, "orders"),
+    _cuped_sql,
+    ("orders",),
     doc="CUPED covariate adjustment for an A/B readout (Deng et al. 2013): "
     "pre-period spend (first half of the date range) as the control "
     "variate for experiment-period spend, deterministic md5 treatment "
@@ -181,9 +177,6 @@ FROM scal
     "NULLIF-guarded divisors.",
     tags=("evaluation", "causal", "agg"),
 )
-def cuped_variance_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_cuped_o")
-    return spark.sql(_cuped_sql(SPARK, "sales_telegram_bot_data_pipeline_cuped_o"))
 
 
 # --------------------------------------------------------------------------
@@ -236,9 +229,10 @@ FROM wide
 """
 
 
-@register(
+register_sql(
     "did_estimator",
-    oracle=_did_sql(DUCKDB, "orders"),
+    _did_sql,
+    ("orders",),
     doc="2x2 difference-in-differences: (md5-assigned treatment) x "
     "(date-midpoint period) cell means of order value in exact cents, "
     "double-differenced — the parallel-trends causal readout. One "
@@ -247,9 +241,6 @@ FROM wide
     "yields NULL, never a crash).",
     tags=("evaluation", "causal", "agg"),
 )
-def did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_did_o")
-    return spark.sql(_did_sql(SPARK, "sales_telegram_bot_data_pipeline_did_o"))
 
 
 # --------------------------------------------------------------------------
@@ -280,7 +271,7 @@ def _isotonic_sql(d: Dialect, orders: str) -> str:
     exact BIGINT prefix-sum differences; DOUBLE appears only there."""
     return f"""
 WITH base AS (
-  SELECT CAST({_EPOCH_DIFF[d.name]} AS BIGINT) AS day_x,
+  SELECT CAST({d.days_since('o_orderdate')} AS BIGINT) AS day_x,
          CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y
   FROM {orders}
 ),
@@ -327,9 +318,10 @@ ORDER BY recency_bin
 """
 
 
-@register(
+register_sql(
     "isotonic_calibration_bins",
-    oracle=_isotonic_sql(DUCKDB, "orders"),
+    _isotonic_sql,
+    ("orders",),
     doc="Isotonic calibration of P(order finished | recency bin) via the "
     f"minimax closed form fit_k = max_(i<=k) min_(j>=k) avg(i..j) over "
     f"K={ISO_BINS} aggregated bins — PAVA without the sequential loop "
@@ -339,9 +331,6 @@ ORDER BY recency_bin
     "before thresholding.",
     tags=("evaluation", "calibration", "agg"),
 )
-def isotonic_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_iso_o")
-    return spark.sql(_isotonic_sql(SPARK, "sales_telegram_bot_data_pipeline_iso_o"))
 
 
 # --------------------------------------------------------------------------
@@ -451,17 +440,17 @@ ORDER BY r.priority, r.segment
 def ipf_raking_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ipf_o")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ipf_c")
+    orders = table_view(spark, sf_dir, "orders")
+    customer = table_view(spark, sf_dir, "customer")
     return spark.sql(
         _ipf_sql(
             SPARK,
-            "sales_telegram_bot_data_pipeline_ipf_o",
-            "sales_telegram_bot_data_pipeline_ipf_c",
+            orders,
+            customer,
             cells_rel="SELECT * FROM " + materialize_once(
                 spark,
                 _ipf_cells_sql(
-                    SPARK, "sales_telegram_bot_data_pipeline_ipf_o", "sales_telegram_bot_data_pipeline_ipf_c"
+                    SPARK, orders, customer
                 ),
                 "ipf_cells",
                 key=sf_dir,
@@ -499,15 +488,15 @@ FROM (
               AS BIGINT) AS by
   FROM (
     SELECT o_orderkey, o_custkey,
-           CAST({_EPOCH_DIFF[d.name]} AS BIGINT) AS day_x
+           CAST({d.days_since('o_orderdate')} AS BIGINT) AS day_x
     FROM {orders}
   ) s
   CROSS JOIN (
     -- key-domain bounds as a ONE-ROW aggregate broadcast, never a
     -- MIN() OVER () corpus window (the single-partition scale killer)
     SELECT MIN(o_custkey) AS mnc, MAX(o_custkey) AS mxc,
-           MIN(CAST({_EPOCH_DIFF[d.name]} AS BIGINT)) AS mnd,
-           MAX(CAST({_EPOCH_DIFF[d.name]} AS BIGINT)) AS mxd
+           MIN(CAST({d.days_since('o_orderdate')} AS BIGINT)) AS mnd,
+           MAX(CAST({d.days_since('o_orderdate')} AS BIGINT)) AS mxd
     FROM {orders}
   ) t
 ) g
@@ -578,8 +567,8 @@ def zorder_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .scalars_extra import range_ranked
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_zo_o")
-    base = spark.sql(_zorder_base_sql(SPARK, "sales_telegram_bot_data_pipeline_zo_o")).localCheckpoint()
+    orders = table_view(spark, sf_dir, "orders")
+    base = spark.sql(_zorder_base_sql(SPARK, orders)).localCheckpoint()
     # ONE distributed rank pass for BOTH layout axes (guide §2.4 — the
     # spearman/rfm axis-fusion): the two sort legs are axis-tagged and
     # unioned, and under (axis, key, okey) ordering each leg is a
@@ -720,14 +709,14 @@ ORDER BY priority
 def bradley_terry_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_bt_o")
+    orders = table_view(spark, sf_dir, "orders")
     duels = materialize_once(
-        spark, _bt_duels_sql(SPARK, "sales_telegram_bot_data_pipeline_bt_o"), "bt_duels",
+        spark, _bt_duels_sql(SPARK, orders), "bt_duels",
         key=sf_dir,
     )
     return spark.sql(
         _bradley_terry_sql(
-            SPARK, "sales_telegram_bot_data_pipeline_bt_o", duels_rel=f"SELECT * FROM {duels}"
+            SPARK, orders, duels_rel=f"SELECT * FROM {duels}"
         )
     )
 
@@ -805,9 +794,10 @@ ORDER BY source_a, source_b
 """
 
 
-@register(
+register_sql(
     "ks_two_sample_sources",
-    oracle=_ks_sql(DUCKDB, "documents"),
+    _ks_sql,
+    ("documents",),
     doc="Exact two-sample Kolmogorov-Smirnov D for every source pair over "
     "doc-length distributions: the max CDF gap decided in cross-multiplied "
     "BIGINT form (|cumA*n_b - cumB*n_a|), divisions only at the final "
@@ -818,9 +808,6 @@ ORDER BY source_a, source_b
     "welch_ttest_sources.",
     tags=("evaluation", "stats", "text"),
 )
-def ks_two_sample_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ks_d")
-    return spark.sql(_ks_sql(SPARK, "sales_telegram_bot_data_pipeline_ks_d"))
 
 
 # --------------------------------------------------------------------------
@@ -874,9 +861,10 @@ ORDER BY event_type
 """
 
 
-@register(
+register_sql(
     "overdispersion_audit",
-    oracle=_overdispersion_sql(DUCKDB, "events"),
+    _overdispersion_sql,
+    ("events",),
     doc="Dispersion index (variance/mean of DAILY counts) per event type: "
     "the Poisson-assumption check (VMR=1 under Poisson; >1.5 flags "
     "clumped arrivals that break rate models and mean-based alert "
@@ -885,9 +873,6 @@ ORDER BY event_type
     "final ratios.",
     tags=("evaluation", "stats", "agg"),
 )
-def overdispersion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_od_e")
-    return spark.sql(_overdispersion_sql(SPARK, "sales_telegram_bot_data_pipeline_od_e"))
 
 
 # --------------------------------------------------------------------------
@@ -961,9 +946,10 @@ ORDER BY covariate
 """
 
 
-@register(
+register_sql(
     "covariate_balance_smd",
-    oracle=_smd_sql(DUCKDB, "orders", "customer"),
+    _smd_sql,
+    ("orders", "customer"),
     doc="Covariate-balance check for the md5 A/B assignment: standardized "
     "mean difference (mean gap over pooled SD) per pre-treatment "
     "covariate (account balance, order count, total spend), |SMD| < 0.1 "
@@ -973,12 +959,6 @@ ORDER BY covariate
     "SMD only.",
     tags=("evaluation", "causal", "agg"),
 )
-def covariate_balance_smd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_smd_o")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_smd_c")
-    return spark.sql(
-        _smd_sql(SPARK, "sales_telegram_bot_data_pipeline_smd_o", "sales_telegram_bot_data_pipeline_smd_c")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1053,9 +1033,10 @@ FROM scal
 """
 
 
-@register(
+register_sql(
     "ab_power_mde",
-    oracle=_mde_sql(DUCKDB, "orders"),
+    _mde_sql,
+    ("orders",),
     doc="Experiment power analysis for the md5 hash split: minimum "
     "detectable effect at alpha=0.05 two-sided / power=0.8 "
     "((z_a+z_b)*sqrt(var*(1/n_t+1/n_c))), raw AND CUPED-adjusted "
@@ -1065,6 +1046,3 @@ FROM scal
     "groupBy(cust) shuffle.",
     tags=("evaluation", "causal", "agg"),
 )
-def ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_mde_o")
-    return spark.sql(_mde_sql(SPARK, "sales_telegram_bot_data_pipeline_mde_o"))

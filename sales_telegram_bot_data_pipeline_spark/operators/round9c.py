@@ -39,9 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
-from ..sources.tables import load_table
-from .curation import _doc_view
+from ..registry import register, register_sql
+from ..sources.tables import table_view
 
 # --------------------------------------------------------------------------
 # mean-excess (EVT) tail audit
@@ -94,9 +93,10 @@ ORDER BY g.j
 """
 
 
-@register(
+register_sql(
     "mean_excess_tail_audit",
-    oracle=_mean_excess_sql(DUCKDB, "orders"),
+    _mean_excess_sql,
+    ("orders",),
     doc="Extreme-value mean-excess audit of order value: e(u) = "
     "E[X-u | X>u] on an exact floor-div twelfths grid over the upper "
     "half of the range — increasing curve = generalized-Pareto heavy "
@@ -105,9 +105,6 @@ ORDER BY g.j
     "map-side-combinable groupBy.",
     tags=("evaluation", "stats", "audit"),
 )
-def mean_excess_tail_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_me_o")
-    return spark.sql(_mean_excess_sql(SPARK, "sales_telegram_bot_data_pipeline_me_o"))
 
 
 # --------------------------------------------------------------------------
@@ -175,9 +172,10 @@ ORDER BY ninth
 """
 
 
-@register(
+register_sql(
     "decision_stump_split_audit",
-    oracle=_stump_sql(DUCKDB, "documents"),
+    _stump_sql,
+    ("documents",),
     doc="Decision-stump (one CART split) audit: weighted Gini impurity of "
     "every floor-div ninths length threshold for the lang='en' label, "
     "parent impurity, gain, and the ROW_NUMBER argmin flag — exact "
@@ -185,8 +183,6 @@ ORDER BY ninth
     "map-side-combinable groupBy, O(8) tail.",
     tags=("evaluation", "stats", "text"),
 )
-def decision_stump_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_stump_sql(SPARK, _doc_view(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -253,9 +249,10 @@ ORDER BY m.source
 """
 
 
-@register(
+register_sql(
     "james_stein_shrinkage",
-    oracle=_james_stein_sql(DUCKDB, "documents"),
+    _james_stein_sql,
+    ("documents",),
     doc="Positive-part James-Stein shrinkage of per-source mean doc "
     "lengths toward the unweighted grand mean: c = max(0, 1 - (k-3) "
     "avg(se_i^2)/S), the empirical-Bayes 'borrow strength' estimator "
@@ -263,8 +260,6 @@ ORDER BY m.source
     "map-side-combinable groupBy, O(k) tail, zero libm.",
     tags=("evaluation", "stats", "agg"),
 )
-def james_stein_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_james_stein_sql(SPARK, _doc_view(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -331,7 +326,7 @@ def pr_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .lm_quality import _logreg_sql
     from .scalars_extra import range_prefix_summed
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_prauc_docs")
+    view = table_view(spark, sf_dir, "documents")
     scored = spark.sql(_logreg_sql(SPARK, view)).select(
         F.col("quality_prob").alias("v"), (F.col("lang") == "en").alias("pos")
     )
@@ -462,9 +457,10 @@ FROM agg
 """
 
 
-@register(
+register_sql(
     "rbo_ranking_overlap",
-    oracle=_rbo_sql(DUCKDB, "lineitem"),
+    _rbo_sql,
+    ("lineitem",),
     doc="Rank-biased overlap (Webber 2010) at depth 20, p=1/2, between the "
     "revenue-top-20 and quantity-top-20 part rankings: with p=1/2 every "
     "weight p^d/d is dyadic, so terms are exact BIGINTs over "
@@ -475,6 +471,3 @@ FROM agg
     "Kendall's tau cannot express.",
     tags=("evaluation", "relational", "agg"),
 )
-def rbo_ranking_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_rbo_l")
-    return spark.sql(_rbo_sql(SPARK, "sales_telegram_bot_data_pipeline_rbo_l"))

@@ -39,9 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
-from ..sources.tables import load_table
-from .curation import _doc_view
+from ..registry import register, register_sql
+from ..sources.tables import table_view
 from .evaluation import _KM_DUR_SQL
 
 # --------------------------------------------------------------------------
@@ -109,10 +108,10 @@ cum AS (
 def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scalars_extra import range_prefix_summed_pair
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_na_o")
+    orders = table_view(spark, sf_dir, "orders")
     g = spark.sql(
         _KM_DUR_SQL.format(
-            orders="sales_telegram_bot_data_pipeline_na_o",
+            orders=orders,
             dd_event="datediff(s.d2, s.d1)",
             dd_censor="datediff(h.hmax, s.d1)",
         )
@@ -184,9 +183,10 @@ FROM agg
 """
 
 
-@register(
+register_sql(
     "cochran_q_gates",
-    oracle=_cochran_q_sql(DUCKDB, "documents"),
+    _cochran_q_sql,
+    ("documents",),
     doc="Cochran's Q test for three paired document quality gates (char "
     "length, token count, mean word length): the k-sample McNemar "
     "generalization, (k-1)(k*sum G_j^2 - T^2)/(k*T - sum L_i^2), every "
@@ -194,8 +194,6 @@ FROM agg
     "'all gates pass at the same rate'.",
     tags=("evaluation", "stats", "text"),
 )
-def cochran_q_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_cochran_q_sql(SPARK, _doc_view(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -318,9 +316,10 @@ FROM mass
 """
 
 
-@register(
+register_sql(
     "harrell_c_index",
-    oracle=_cindex_sql(DUCKDB, "orders", "customer"),
+    _cindex_sql,
+    ("orders", "customer"),
     doc="Harrell's concordance index of a 16-bin account-balance risk "
     "score vs days-to-repurchase with right censoring, WITHOUT the "
     "O(n^2) pair join: cohort -> (duration x bin) dense grid (bounded "
@@ -330,12 +329,6 @@ FROM mass
     "division. The survival-eval twin of roc_auc_quality_score.",
     tags=("evaluation", "survival", "stats"),
 )
-def harrell_c_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ci_o")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ci_c")
-    return spark.sql(
-        _cindex_sql(SPARK, "sales_telegram_bot_data_pipeline_ci_o", "sales_telegram_bot_data_pipeline_ci_c")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -389,9 +382,10 @@ ORDER BY ninth
 """
 
 
-@register(
+register_sql(
     "quantile_pinball_fit_audit",
-    oracle=_pinball_sql(DUCKDB, "orders"),
+    _pinball_sql,
+    ("orders",),
     doc="Pinball-loss audit of candidate constant predictors for the "
     "tau=0.9 order-value quantile on a floor-div ninths grid: 10x loss "
     "as an exact BIGINT (9(x-c) above, (c-x) below), argmin by integer "
@@ -400,9 +394,6 @@ ORDER BY ninth
     "broadcast 8-row grid, one map-side-combinable groupBy.",
     tags=("evaluation", "stats", "agg"),
 )
-def quantile_pinball_fit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_pb_o")
-    return spark.sql(_pinball_sql(SPARK, "sales_telegram_bot_data_pipeline_pb_o"))
 
 
 # --------------------------------------------------------------------------
@@ -478,9 +469,10 @@ ORDER BY policy
 """
 
 
-@register(
+register_sql(
     "snips_offpolicy_eval",
-    oracle=_snips_sql(DUCKDB, "orders", "customer"),
+    _snips_sql,
+    ("orders", "customer"),
     doc="Off-policy (counterfactual) evaluation from md5-randomized logs: "
     "IPS and self-normalized IPS value estimates plus effective sample "
     "size for two deterministic target policies, logging propensity the "
@@ -489,9 +481,3 @@ ORDER BY policy
     "conditional-aggregation scan with a 2-row policy grid.",
     tags=("evaluation", "causal", "agg"),
 )
-def snips_offpolicy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_sn_o")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_sn_c")
-    return spark.sql(
-        _snips_sql(SPARK, "sales_telegram_bot_data_pipeline_sn_o", "sales_telegram_bot_data_pipeline_sn_c")
-    )

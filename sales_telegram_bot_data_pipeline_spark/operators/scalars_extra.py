@@ -14,8 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import register
-from ..sources.tables import load_table
+from ..functions.dialect import Dialect
+from ..registry import register, register_sql
+from ..sources.tables import load_table, table_view
 
 
 @register(
@@ -56,34 +57,25 @@ def string_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "percentile_prices",
-    oracle="""
+_PERCENTILE_SQL = """
 SELECT o_orderpriority,
        CAST(ROUND(percentile_cont(0.5) WITHIN GROUP (ORDER BY o_totalprice), 6) AS DOUBLE) AS median_price,
        CAST(ROUND(percentile_cont(0.9) WITHIN GROUP (ORDER BY o_totalprice), 6) AS DOUBLE) AS p90_price,
        CAST(MIN(o_totalprice) AS DOUBLE) AS min_price,
        CAST(MAX(o_totalprice) AS DOUBLE) AS max_price
-FROM orders
+FROM {orders}
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
-""",
+"""
+
+register_sql(
+    "percentile_prices",
+    lambda d, orders: _PERCENTILE_SQL.format(orders=orders),
+    ("orders",),
     doc="Ordered-set aggregates: exact linear-interpolation percentiles "
     "(median / p90) per group.",
     tags=("agg", "percentile"),
 )
-def percentile_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ord3")
-    return spark.sql("""
-SELECT o_orderpriority,
-       CAST(ROUND(percentile_cont(0.5) WITHIN GROUP (ORDER BY o_totalprice), 6) AS DOUBLE) AS median_price,
-       CAST(ROUND(percentile_cont(0.9) WITHIN GROUP (ORDER BY o_totalprice), 6) AS DOUBLE) AS p90_price,
-       CAST(MIN(o_totalprice) AS DOUBLE) AS min_price,
-       CAST(MAX(o_totalprice) AS DOUBLE) AS max_price
-FROM sales_telegram_bot_data_pipeline_ord3
-GROUP BY o_orderpriority
-ORDER BY o_orderpriority
-""")
 
 
 _MOMENTS_ORACLE = """
@@ -113,8 +105,8 @@ FROM m ORDER BY l_returnflag
     tags=("agg", "stats"),
 )
 def moment_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_li2")
-    return spark.sql(_MOMENTS_ORACLE.replace("FROM lineitem", "FROM sales_telegram_bot_data_pipeline_li2"))
+    lineitem = table_view(spark, sf_dir, "lineitem")
+    return spark.sql(_MOMENTS_ORACLE.replace("FROM lineitem", f"FROM {lineitem}"))
 
 
 @register(
@@ -361,9 +353,10 @@ FROM agg ORDER BY event_type
 """
 
 
-@register(
+register_sql(
     "sketch_cardinality_audit",
-    oracle=_SKETCH_AUDIT_SQL.format(table="events"),
+    lambda d, events: _SKETCH_AUDIT_SQL.format(table=events),
+    ("events",),
     doc="HLL sketch audit: per-group approx_count_distinct next to the "
     "exact COUNT(DISTINCT), emitting the exact value plus a 3-sigma "
     "contract flag (15% = 3x the function's default 5% rsd — a 1-sigma "
@@ -375,20 +368,16 @@ FROM agg ORDER BY event_type
     "mergeable state, map-side partials, no distinct-expand shuffle.",
     tags=("agg", "sketch", "approx"),
 )
-def sketch_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_ev_sketch"
-    )
-    return spark.sql(_SKETCH_AUDIT_SQL.format(table="sales_telegram_bot_data_pipeline_ev_sketch"))
 
 
-def _sketch_quantile_sql(approx_fn: str) -> str:
+def _sketch_quantile_sql(d: Dialect) -> str:
     """Quantile-sketch audit: engine quantile sketch (Spark: approx_percentile
     / GK; DuckDB: approx_quantile / t-digest) next to the exact interpolated
     median, emitting the exact value and a within-5% contract flag — the
     same never-emit-the-sketch pattern as sketch_cardinality_audit.  At
     100 TB a quantile sketch is the only affordable percentile: fixed-size
     mergeable state instead of a per-group sort."""
+    approx_fn = "approx_percentile" if d.name == "spark" else "approx_quantile"
     return f"""
 WITH agg AS (
   SELECT o_orderpriority,
@@ -403,24 +392,16 @@ FROM agg ORDER BY o_orderpriority
 """
 
 
-@register(
+register_sql(
     "sketch_quantile_audit",
-    oracle=_sketch_quantile_sql("approx_quantile").format(table="orders"),
+    lambda d, orders: _sketch_quantile_sql(d).format(table=orders),
+    ("orders",),
     doc="Quantile-sketch audit: approx median vs exact interpolated median "
     "per group with a within-5% contract flag; sketch values are engine-"
     "specific and never emitted — the contract is the checkable surface. "
     "Fixed-size mergeable sketch state replaces a per-group sort at scale.",
     tags=("agg", "sketch", "approx", "percentile"),
 )
-def sketch_quantile_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_ord_sketch"
-    )
-    return spark.sql(
-        _sketch_quantile_sql("approx_percentile").format(
-            table="sales_telegram_bot_data_pipeline_ord_sketch"
-        )
-    )
 
 
 @register(
@@ -585,9 +566,13 @@ ORDER BY c.c_custkey, total_price DESC, o_orderkey
 """
 
 
-@register(
+register_sql(
     "lateral_topk_orders",
-    oracle=_LATERAL_TOPK_SQL.format(customer="customer", orders="orders"),
+    lambda d, customer, orders: _LATERAL_TOPK_SQL.format(
+        customer=customer,
+        orders=orders,
+    ),
+    ("customer", "orders"),
     doc="Correlated LATERAL subquery with ORDER BY + LIMIT: top-2 orders "
     "per sampled customer expressed as a per-row subquery — the SQL:2016 "
     "lateral surface of the same semantics topk_orders_per_segment writes "
@@ -596,15 +581,6 @@ ORDER BY c.c_custkey, total_price DESC, o_orderkey
     "execution survives), so the per-row FORM costs nothing at scale.",
     tags=("relational", "subquery", "lateral"),
 )
-def lateral_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_lat_cust")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_lat_ord")
-    return spark.sql(
-        _LATERAL_TOPK_SQL.format(
-            customer="sales_telegram_bot_data_pipeline_lat_cust",
-            orders="sales_telegram_bot_data_pipeline_lat_ord",
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -635,9 +611,10 @@ ORDER BY bucket
 """
 
 
-@register(
+register_sql(
     "price_histogram_equiwidth",
-    oracle=_HISTOGRAM_SQL.format(orders="orders"),
+    lambda d, orders: _HISTOGRAM_SQL.format(orders=orders),
+    ("orders",),
     doc=f"Equi-width histogram of order totals in {HIST_BUCKETS} buckets — "
     "the classic two-phase shape: an O(1) bounds aggregate broadcast into "
     "a single bucketing scan with map-side combinable counts; the "
@@ -646,11 +623,6 @@ ORDER BY bucket
     "engines bucket identically.",
     tags=("agg", "stats", "two-phase"),
 )
-def price_histogram_equiwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_hist_ord"
-    )
-    return spark.sql(_HISTOGRAM_SQL.format(orders="sales_telegram_bot_data_pipeline_hist_ord"))
 
 
 # --------------------------------------------------------------------------
@@ -1075,9 +1047,13 @@ FROM exact x CROSS JOIN best be
 """
 
 
-@register(
+register_sql(
     "join_cardinality_sketch_audit",
-    oracle=_join_card_sql("duckdb").format(orders="orders", lineitem="lineitem"),
+    lambda d, orders, lineitem: _join_card_sql(d.name).format(
+        orders=orders,
+        lineitem=lineitem,
+    ),
+    ("orders", "lineitem"),
     doc=f"Join-size estimation audit: CMS inner product ({JC_D}x{JC_W} "
     "grids, MIN over rows, guaranteed overcount) BESIDE an unbiased "
     f"hash-sampled key synopsis (keys with h%{JC_SAMPLE_MOD}==0, scaled "
@@ -1088,15 +1064,6 @@ FROM exact x CROSS JOIN best be
     "before any explode; integer-only.",
     tags=("stats", "sketch", "join"),
 )
-def join_cardinality_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_jc_ord")
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_jc_li")
-    return spark.sql(
-        _join_card_sql("spark").format(
-            orders="sales_telegram_bot_data_pipeline_jc_ord",
-            lineitem="sales_telegram_bot_data_pipeline_jc_li",
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1126,18 +1093,16 @@ FROM tot t CROSS JOIN tops s
 """
 
 
-@register(
+register_sql(
     "join_key_skew_audit",
-    oracle=_join_skew_sql().format(lineitem="lineitem"),
+    lambda d, lineitem: _join_skew_sql().format(lineitem=lineitem),
+    ("lineitem",),
     doc=f"Join-key skew audit over lineitem.l_orderkey: hottest-key and "
     "top-10 share from one map-side-combinable per-key aggregate + a "
     "TakeOrdered — the pre-flight numbers that decide plain shuffle vs "
     f"AQE skew split vs salted_join (flag: hottest > {SKEW_FACTOR}x mean).",
     tags=("stats", "join", "audit"),
 )
-def join_key_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_skew_li")
-    return spark.sql(_join_skew_sql().format(lineitem="sales_telegram_bot_data_pipeline_skew_li"))
 
 
 # ---------------------------------------------------------------------------
@@ -1215,9 +1180,10 @@ ORDER BY layout, bucket
 """
 
 
-@register(
+register_sql(
     "zorder_clustering_stats",
-    oracle=_zorder_sql("duckdb").format(orders="orders"),
+    lambda d, orders: _zorder_sql(d.name).format(orders=orders),
+    ("orders",),
     doc=f"Z-order layout audit: orders keyed by a {ZO_BITS}-bit-interleaved "
     "(custkey, orderdate) Morton code vs a single-column sort, "
     f"{ZO_BUCKETS} equal-width buckets each, per-bucket min-max span "
@@ -1227,9 +1193,6 @@ ORDER BY layout, bucket
     "layout.",
     tags=("stats", "layout", "pruning"),
 )
-def zorder_clustering_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_zo_ord")
-    return spark.sql(_zorder_sql("spark").format(orders="sales_telegram_bot_data_pipeline_zo_ord"))
 
 
 # ---------------------------------------------------------------------------
@@ -1310,9 +1273,12 @@ FROM verdicts
 """
 
 
-@register(
+register_sql(
     "bloom_semijoin_prune_audit",
-    oracle=_bloom_prune_sql("duckdb").format(customer="customer", orders="orders"),
+    lambda d, customer, orders: _bloom_prune_sql(d.name).format(
+        customer=customer, orders=orders
+    ),
+    ("customer", "orders"),
     doc=f"Bloom-filter semi-join pruning audit: a {BF_WORDS * BF_WORD_BITS}-bit"
     f" / {BF_K}-hash filter over the selective build side (BUILDING "
     "customers) built as a broadcastable BIT_OR word relation, every "
@@ -1322,14 +1288,6 @@ FROM verdicts
     "integer/bit arithmetic, portable md5 positions.",
     tags=("stats", "join", "pruning", "sketch"),
 )
-def bloom_semijoin_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_bf_cust")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_bf_ord")
-    return spark.sql(
-        _bloom_prune_sql("spark").format(
-            customer="sales_telegram_bot_data_pipeline_bf_cust", orders="sales_telegram_bot_data_pipeline_bf_ord"
-        )
-    )
 
 
 # --------------------------------------------------------------------------

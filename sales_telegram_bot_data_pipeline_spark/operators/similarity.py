@@ -35,20 +35,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
+from ..registry import register, register_sql
 from ..session import fixed_plan
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_view
 
 N_QUERIES = 5  # vec_id < 5 are the query vectors
 TOP_K = 5
 N_BANDS = 4
 BAND_BITS = 6  # 64 buckets per band; bands use disjoint embedding dims
 NEARDUP_THRESHOLD = 0.3  # synthetic embeddings max pairwise cosine ~0.37
-
-
-def _emb_view(spark: SparkSession, sf_dir: str, name: str = "sales_telegram_bot_data_pipeline_emb") -> str:
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView(name)
-    return name
 
 
 def _dots(d: Dialect, a: str, b: str) -> str:
@@ -187,7 +182,7 @@ def _bruteforce_scored(d: Dialect, table: str) -> str:
     tags=("similarity", "topk"),
 )
 def knn_cosine_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_rank_twostage_sql(_bruteforce_scored(SPARK, _emb_view(spark, sf_dir))))
+    return spark.sql(_rank_twostage_sql(_bruteforce_scored(SPARK, table_view(spark, sf_dir, "embeddings"))))
 
 
 # --------------------------------------------------------------------------
@@ -220,7 +215,7 @@ JOIN {table} c ON c.vec_id = cand.neighbor_id
     tags=("similarity", "lsh", "topk"),
 )
 def knn_cosine_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_rank_twostage_sql(_lsh_scored(SPARK, _emb_view(spark, sf_dir))))
+    return spark.sql(_rank_twostage_sql(_lsh_scored(SPARK, table_view(spark, sf_dir, "embeddings"))))
 
 
 # --------------------------------------------------------------------------
@@ -302,7 +297,7 @@ JOIN {table} c ON c.vec_id = a.vec_id
     tags=("similarity", "ivf", "topk"),
 )
 def knn_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_rank_twostage_sql(_ivf_scored(SPARK, _emb_view(spark, sf_dir))))
+    return spark.sql(_rank_twostage_sql(_ivf_scored(SPARK, table_view(spark, sf_dir, "embeddings"))))
 
 
 # --------------------------------------------------------------------------
@@ -335,17 +330,16 @@ ORDER BY vec_a, vec_b
 """
 
 
-@register(
+register_sql(
     "embedding_cosine_neardup",
-    oracle=_neardup_banded_sql(DUCKDB, "embeddings"),
+    _neardup_banded_sql,
+    ("embeddings",),
     doc="Embedding-cosine near-duplicate pairs over the FULL corpus via the "
     f"banded sign-bucket join ({N_BANDS}x{BAND_BITS}-bit) + exact cosine "
     f"refine (>= {NEARDUP_THRESHOLD}) — sub-quadratic candidate generation, "
     "the embedding-space member of the dedup family.",
     tags=("similarity", "dedup", "lsh"),
 )
-def embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_neardup_banded_sql(SPARK, _emb_view(spark, sf_dir)))
 
 
 def _neardup_pairs_view(spark: SparkSession, sf_dir: str) -> str:
@@ -358,7 +352,7 @@ def _neardup_pairs_view(spark: SparkSession, sf_dir: str) -> str:
     from ..functions.dialect import strip_order_by
     from .dedup import session_view
 
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     return session_view(
         spark, sf_dir, "ndpairs",
         lambda: spark.sql(strip_order_by(_neardup_banded_sql(SPARK, view))),
@@ -440,7 +434,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the candidate join then references it TWICE (both pair sides).
     # Materialize it once (integer (vec_id, cid) pairs — tiny) instead of
     # trusting exchange reuse to merge the two heavy subtrees.
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     cent, assigned = _cent_assigned_ctes(SPARK, view, k=SEM_K)
     spark.sql(f"WITH cent AS ({cent}) {assigned}").localCheckpoint().createOrReplaceTempView(
         "sales_telegram_bot_data_pipeline_semdedup_assign"
@@ -597,9 +591,10 @@ ORDER BY c.cid, pos
 """
 
 
-@register(
+register_sql(
     "kmeans_lloyd",
-    oracle=_kmeans_sql(DUCKDB, "embeddings"),
+    _kmeans_sql,
+    ("embeddings",),
     doc=f"K-means, {KMEANS_ITERS} Lloyd iterations from the frozen IVF "
     "init: cosine assignment against exact integer-unit centroids "
     "(half-up integer means → bit-identical across engines), vectors "
@@ -609,13 +604,12 @@ ORDER BY c.cid, pos
     "index stands in for.",
     tags=("similarity", "ivf", "iterative"),
 )
-def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_kmeans_sql(SPARK, _emb_view(spark, sf_dir)))
 
 
-@register(
+register_sql(
     "kmeans_separation_audit",
-    oracle=_kmeans_sql(DUCKDB, "embeddings", final="silhouette"),
+    lambda d, embeddings: _kmeans_sql(d, embeddings, final="silhouette"),
+    ("embeddings",),
     doc="Cluster-separation audit (simplified silhouette): per final Lloyd "
     "cluster, the mean margin between each member's cosine to its OWN "
     "centroid and its best other-centroid cosine — the 'are these "
@@ -627,8 +621,6 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     "division at the end.",
     tags=("similarity", "clustering", "audit"),
 )
-def kmeans_separation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_kmeans_sql(SPARK, _emb_view(spark, sf_dir), final="silhouette"))
 
 
 def _pair_sim_sql(d: Dialect, table: str) -> str:
@@ -646,16 +638,15 @@ ORDER BY vec_a, vec_b
 """
 
 
-@register(
+register_sql(
     "embedding_cosine_allpairs_small",
-    oracle=_pair_sim_sql(DUCKDB, "embeddings"),
+    _pair_sim_sql,
+    ("embeddings",),
     doc="Exactness BASELINE for the near-dup family: all-pairs cosine over "
     "a bounded 40-vector slice. Deliberately not the scale path — the "
     "general operator is embedding_cosine_neardup (banded).",
     tags=("similarity", "baseline"),
 )
-def embedding_cosine_allpairs_small(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_pair_sim_sql(SPARK, _emb_view(spark, sf_dir)))
 
 
 def _centroids_sql(d: Dialect, table: str) -> str:
@@ -704,17 +695,16 @@ ORDER BY d.label
 """
 
 
-@register(
+register_sql(
     "embedding_centroids",
-    oracle=_centroids_sql(DUCKDB, "embeddings"),
+    _centroids_sql,
+    ("embeddings",),
     doc="Per-label embedding centroids (the IVF training step as a "
     "first-class query): posexplode to (label, dim, value), partial-agg "
     "groupBy — whole vectors never shuffle; exact decimal sums + round(6) "
     "for cross-engine stability.",
     tags=("similarity", "agg"),
 )
-def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_centroids_sql(SPARK, _emb_view(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -846,9 +836,10 @@ JOIN {table} c ON c.vec_id = cand.neighbor_id
     return _rank_window_sql(rerank)
 
 
-@register(
+register_sql(
     "knn_cosine_sq8",
-    oracle=_sq8_sql(DUCKDB, "embeddings"),
+    _sq8_sql,
+    ("embeddings",),
     doc=f"Scalar-quantized ANN: per-vector int8 codes (4x memory cut), "
     "exact-integer quantized cosine ranks candidates (two-stage top-k on "
     f"the Spark side), top-{SQ8_CAND} survivors rerank at full precision "
@@ -856,8 +847,6 @@ JOIN {table} c ON c.vec_id = cand.neighbor_id
     "never O(corpus).",
     tags=("similarity", "topk", "quantization"),
 )
-def knn_cosine_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_sq8_sql(SPARK, _emb_view(spark, sf_dir)))
 
 
 def standardize_embeddings_by_label_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1201,12 +1190,8 @@ ORDER BY doc_a, doc_b
     tags=("similarity", "retrieval", "text"),
 )
 def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb_view(spark, sf_dir)
-    from ..sources.tables import load_table
-
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_bitext_docs"
-    )
+    emb = table_view(spark, sf_dir, "embeddings")
+    documents = table_view(spark, sf_dir, "documents")
     # materialize the cross-language scored pair relation once (guide
     # §3.3): it feeds BOTH neighborhood aggregates and the final margin
     # projection, and the old scored-only checkpoint still re-joined the
@@ -1216,7 +1201,7 @@ def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cross = materialize_once(
         spark,
-        _bitext_cross_sql(SPARK, emb, "sales_telegram_bot_data_pipeline_bitext_docs"),
+        _bitext_cross_sql(SPARK, emb, documents),
         "bitext_cross",
         key=sf_dir,
     )
@@ -1224,7 +1209,7 @@ def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         _bitext_mining_sql(
             SPARK,
             emb,
-            "sales_telegram_bot_data_pipeline_bitext_docs",
+            documents,
             cross_rel=cross,
         )
     )
@@ -1283,7 +1268,7 @@ ORDER BY vec_id
     tags=("similarity", "curation", "clustering"),
 )
 def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     spark.sql(_units_sql(SPARK, view)).localCheckpoint().createOrReplaceTempView(
         "sales_telegram_bot_data_pipeline_cbal_units"
     )
@@ -1402,7 +1387,7 @@ ORDER BY v.np
     tags=("similarity", "ivf", "audit"),
 )
 def ivf_nprobe_tuning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     cent, assigned = _cent_assigned_ctes(SPARK, view)
     pre = f"WITH cent AS ({cent}) "
     # The four shared-index materializations run under fixed_plan (VERDICT
@@ -1582,9 +1567,10 @@ ORDER BY query_id, rank
 """
 
 
-@register(
+register_sql(
     "knn_cosine_pq",
-    oracle=_pq_sql(DUCKDB, "embeddings"),
+    _pq_sql,
+    ("embeddings",),
     doc=f"PQ-ADC ANN: {PQ_M} per-subspace codebooks of {PQ_KC} frozen "
     "vectors, map-side argmin-L2 encoding over the broadcast codebook "
     "(corpus compresses to PQ_M bytes/vector; the embedding column never "
@@ -1594,8 +1580,6 @@ ORDER BY query_id, rank
     "(bandwidth-bound); oracle builds the identical index.",
     tags=("similarity", "pq", "topk"),
 )
-def knn_cosine_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_pq_sql(SPARK, _emb_view(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -1658,9 +1642,10 @@ ORDER BY dim
 """
 
 
-@register(
+register_sql(
     "matryoshka_recall_audit",
-    oracle=_mrl_sql(DUCKDB, "embeddings"),
+    _mrl_sql,
+    ("embeddings",),
     doc=f"Matryoshka truncation-recall audit: top-{TOP_K} by prefix-dim "
     f"cosine for dims {_MRL_DIMS} vs the full-dim exact top-{TOP_K} — the "
     "storage/recall tradeoff table for truncating an embedding column at "
@@ -1669,8 +1654,6 @@ ORDER BY dim
     "self-check (test-pinned).",
     tags=("similarity", "audit", "topk"),
 )
-def matryoshka_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_mrl_sql(SPARK, _emb_view(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -1719,9 +1702,10 @@ ORDER BY rank
 """
 
 
-@register(
+register_sql(
     "mips_topk_audit",
-    oracle=_mips_sql(DUCKDB, "embeddings"),
+    _mips_sql,
+    ("embeddings",),
     doc=f"Maximum-inner-product top-{MIPS_K} (recommendation scoring: dot "
     "product, NOT cosine — magnitude matters) with a retrievability audit "
     "against the cosine-LSH index: each exact-MIP neighbor is flagged "
@@ -1733,8 +1717,6 @@ ORDER BY rank
     "index; the rank window is over the bounded top-k relation only.",
     tags=("similarity", "topk", "audit"),
 )
-def mips_topk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_mips_sql(SPARK, _emb_view(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -1803,9 +1785,10 @@ FROM err
 """
 
 
-@register(
+register_sql(
     "sq8_quantization_error_audit",
-    oracle=_sq8_err_sql(DUCKDB, "embeddings"),
+    _sq8_err_sql,
+    ("embeddings",),
     doc="SQ8 quantization-accuracy audit: exact float cosine vs int8-code "
     "cosine over a deterministic md5 QUARTER of the banded LSH candidate "
     "pairs — mean/max abs error and the fraction within 0.01; the "
@@ -1817,5 +1800,3 @@ FROM err
     "minhash_estimate_error_audit / ivf_nprobe_tuning_audit.",
     tags=("similarity", "audit", "quantization"),
 )
-def sq8_quantization_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_sq8_err_sql(SPARK, _emb_view(spark, sf_dir)))

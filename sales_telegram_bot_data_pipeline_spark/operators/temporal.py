@@ -26,13 +26,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.dialect import DUCKDB, SPARK
-from ..registry import register
+from ..functions.dialect import Dialect
+from ..registry import register, register_sql
 from ..sources.tables import load_table
-
-
-def _dec(col: str, prec: int = 18, scale: int = 2) -> F.Column:
-    return F.col(col).cast(f"decimal({prec},{scale})")
+from .relational import _dec
 
 
 # ---------------------------------------------------------------------------
@@ -618,20 +615,16 @@ ORDER BY t.event_type, s.day
 """
 
 
-@register(
+register_sql(
     "date_spine_gap_fill",
-    oracle=_gap_fill_sql(DUCKDB, "events"),
+    _gap_fill_sql,
+    ("events",),
     doc="Calendar gap filling: zero-filled daily counts per event_type via "
     "a generated date spine (O(range), never scanned) CROSS JOIN types, "
     "LEFT JOIN daily partial-aggregates — the report-table densification "
     "every time-series pipeline needs; spine side broadcasts.",
     tags=("temporal", "timeseries", "join"),
 )
-def date_spine_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_ev_spine"
-    )
-    return spark.sql(_gap_fill_sql(SPARK, "sales_telegram_bot_data_pipeline_ev_spine"))
 
 
 _DAU_SQL = """
@@ -655,9 +648,10 @@ ORDER BY d.day
 """
 
 
-@register(
+register_sql(
     "daily_active_cumulative_users",
-    oracle=_DAU_SQL.format(table="events"),
+    lambda d, events: _DAU_SQL.format(table=events),
+    ("events",),
     doc="DAU + new users + cumulative registered users per day: first-seen "
     "day per user (one groupBy on the user key), daily distincts, and a "
     "running SUM over the DAY axis — the window is O(days), not O(events), "
@@ -665,11 +659,6 @@ ORDER BY d.day
     "corpus (cast BIGINT: DuckDB HUGEINT window-SUM trap).",
     tags=("temporal", "timeseries", "window"),
 )
-def daily_active_cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_ev_dau"
-    )
-    return spark.sql(_DAU_SQL.format(table="sales_telegram_bot_data_pipeline_ev_dau"))
 
 
 # --------------------------------------------------------------------------
@@ -739,9 +728,10 @@ ORDER BY user_id
 """
 
 
-@register(
+register_sql(
     "user_cadence_profile",
-    oracle=_cadence_sql(DUCKDB).format(table="events"),
+    lambda d, events: _cadence_sql(d).format(table=events),
+    ("events",),
     doc="Per-user inter-arrival cadence: LAG gaps (user-partitioned "
     "window), continuous median/p90 quantiles, regularity ratio, and a "
     "too-fast-too-regular bot flag. Gap DELTAS cancel session-timezone "
@@ -749,11 +739,6 @@ ORDER BY user_id
     "engines.",
     tags=("temporal", "window", "agg"),
 )
-def user_cadence_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_ev_cad"
-    )
-    return spark.sql(_cadence_sql(SPARK).format(table="sales_telegram_bot_data_pipeline_ev_cad"))
 
 
 # --------------------------------------------------------------------------
@@ -792,9 +777,10 @@ ORDER BY custkey, period_id
 """
 
 
-@register(
+register_sql(
     "validity_interval_coalesce",
-    oracle=_COALESCE_SQL.format(table="orders"),
+    lambda d, orders: _COALESCE_SQL.format(table=orders),
+    ("orders",),
     doc="Interval-union coalescing: each order opens a [orderdate, +90d) "
     "validity window (the reference's op-46 window semantics); overlapping "
     "windows per customer merge into coverage periods via the running-max "
@@ -805,11 +791,6 @@ ORDER BY custkey, period_id
     "consistently. Pure date/integer arithmetic, engine-portable.",
     tags=("temporal", "window"),
 )
-def validity_interval_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_ord_iv"
-    )
-    return spark.sql(_COALESCE_SQL.format(table="sales_telegram_bot_data_pipeline_ord_iv"))
 
 
 # --------------------------------------------------------------------------
@@ -888,9 +869,10 @@ ORDER BY user_id, session_seq
 """
 
 
-@register(
+register_sql(
     "sessionize_gap_islands",
-    oracle=_sessionize_sql(DUCKDB).format(table="events"),
+    lambda d, events: _sessionize_sql(d).format(table=events),
+    ("events",),
     doc=f"Batch gap-based sessionization ({SESSIONIZE_GAP_S}s silence "
     "opens a new session): LAG-mark + running-SUM islands over "
     "user-partitioned windows -> one session row per (user, seq) with "
@@ -898,11 +880,6 @@ ORDER BY user_id, session_seq
     "twin of F.session_window; integer-seconds arithmetic end-to-end.",
     tags=("temporal", "window", "session"),
 )
-def sessionize_gap_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_ev_sess"
-    )
-    return spark.sql(_sessionize_sql(SPARK).format(table="sales_telegram_bot_data_pipeline_ev_sess"))
 
 
 # --------------------------------------------------------------------------
@@ -945,9 +922,10 @@ FROM per_sess
 """
 
 
-@register(
+register_sql(
     "session_conversion_rate",
-    oracle=_session_conversion_sql(DUCKDB).format(table="events"),
+    lambda d, events: _session_conversion_sql(d).format(table=events),
+    ("events",),
     doc="In-session funnel conversion: fraction of sessions containing a "
     "'view' that reach a 'purchase' AFTER that view within the SAME "
     "session — attribution bounded by the visit, composed from the shared "
@@ -955,13 +933,6 @@ FROM per_sess
     "O(1) rollup. Integer epochs end-to-end.",
     tags=("temporal", "session", "funnel"),
 )
-def session_conversion_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_ev_sconv"
-    )
-    return spark.sql(
-        _session_conversion_sql(SPARK).format(table="sales_telegram_bot_data_pipeline_ev_sconv")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1013,9 +984,10 @@ ORDER BY event_type
 """
 
 
-@register(
+register_sql(
     "freshness_decay_profile",
-    oracle=_freshness_decay_sql(DUCKDB).format(table="events"),
+    lambda d, events: _freshness_decay_sql(d).format(table=events),
+    ("events",),
     doc=f"Exponential-decay freshness profile: per event_type, each event "
     f"weighted 2^(-age_days/{DECAY_HALF_LIFE_DAYS}) from the corpus max "
     "epoch — the recency signal next to raw counts. Per-row weights "
@@ -1025,13 +997,6 @@ ORDER BY event_type
     "subquery.",
     tags=("temporal", "decay", "agg"),
 )
-def freshness_decay_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_ev_fresh"
-    )
-    return spark.sql(
-        _freshness_decay_sql(SPARK).format(table="sales_telegram_bot_data_pipeline_ev_fresh")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1057,9 +1022,10 @@ ORDER BY user_id, valid_from, event_type, event_id
 """
 
 
-@register(
+register_sql(
     "scd2_build_from_events",
-    oracle=_SCD2_BUILD_SQL.format(events="events"),
+    lambda d, events: _SCD2_BUILD_SQL.format(events=events),
+    ("events",),
     doc="SCD2 dimension RECONSTRUCTION from a raw change-log: each event "
     "opens a validity interval closed by the key's next event "
     "(LEAD over a per-key window — partitioned by user_id, never global), "
@@ -1071,9 +1037,6 @@ ORDER BY user_id, valid_from, event_type, event_id
     "with the same ts and event_type.",
     tags=("temporal", "scd2", "window"),
 )
-def scd2_build_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_scd2b_ev")
-    return spark.sql(_SCD2_BUILD_SQL.format(events="sales_telegram_bot_data_pipeline_scd2b_ev"))
 
 
 # --------------------------------------------------------------------------
@@ -1103,9 +1066,21 @@ FROM closed GROUP BY user_id ORDER BY user_id
 """
 
 
-@register(
+def _twap_sql(d: Dialect, events: str) -> str:
+    if d.name == "spark":
+        # ts reads as TIMESTAMP_NTZ; the cast shifts both operands of the
+        # difference identically (UTC session), so durations are exact
+        return _TWAP_SQL.format(
+            events=events, epoch_us="unix_micros(cast(", epoch_close=" as timestamp))"
+        )
+    # epoch_us() returns BIGINT micros in DuckDB
+    return _TWAP_SQL.format(events=events, epoch_us="epoch_us(", epoch_close=")")
+
+
+register_sql(
     "time_weighted_average_value",
-    oracle=_TWAP_SQL.format(events="events", epoch_us="epoch_us(", epoch_close=")"),  # noqa: E501 — epoch_us() returns BIGINT micros in DuckDB
+    _twap_sql,
+    ("events",),
     doc="Time-weighted average (TWAP) of each user's event value: every "
     "event opens a state interval closed by the key's next event (the "
     "scd2_build_from_events interval model); the average weights each "
@@ -1116,17 +1091,6 @@ FROM closed GROUP BY user_id ORDER BY user_id
     "partitioned window only.",
     tags=("temporal", "window", "agg"),
 )
-def time_weighted_average_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_twap_ev")
-    return spark.sql(
-        _TWAP_SQL.format(
-            events="sales_telegram_bot_data_pipeline_twap_ev",
-            # ts reads as TIMESTAMP_NTZ; the cast shifts both operands of the
-            # difference identically (UTC session), so durations are exact
-            epoch_us="unix_micros(cast(",
-            epoch_close=" as timestamp))",
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1162,13 +1126,15 @@ ORDER BY w.week
 """
 
 
-@register(
+# FLOOR (not `div`, which truncates toward zero) so a timestamp before the
+# 2024-01-01 anchor lands in the same negative week in both engines
+# (day -3 -> week -1, matching DuckDB floor-division).
+register_sql(
     "growth_accounting_weekly",
-    oracle=_GROWTH_SQL.format(
-        week="CAST(FLOOR(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))"
-        " / 7.0) AS BIGINT)",
-        events="events",
+    lambda d, events: _GROWTH_SQL.format(
+        week=f"CAST(FLOOR({d.days_since('ts', '2024-01-01')} / 7.0) AS BIGINT)", events=events
     ),
+    ("events",),
     doc="Weekly growth accounting: per week, active users split into new "
     "(first-ever week), retained (active previous week), resurrected "
     "(returning after a gap), plus churned-from-previous (last week's "
@@ -1180,18 +1146,6 @@ ORDER BY w.week
     "DuckDB — no truncate-vs-floor divergence.",
     tags=("temporal", "retention", "window"),
 )
-def growth_accounting_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_gr_ev")
-    return spark.sql(
-        _GROWTH_SQL.format(
-            # FLOOR (not `div`, which truncates toward zero) so a timestamp
-            # before the 2024-01-01 anchor lands in the same negative week in
-            # both engines (day -3 -> week -1, matching DuckDB floor-division).
-            week="CAST(FLOOR(datediff(to_date(ts), to_date('2024-01-01'))"
-            " / 7.0) AS BIGINT)",
-            events="sales_telegram_bot_data_pipeline_gr_ev",
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1322,11 +1276,10 @@ MTA_HORIZON_MIN = 24 * 60  # wider than the 1:1 interval join: multi-touch
 # conversion window a marketing report actually uses
 
 
-@register(
+register_sql(
     "multitouch_attribution_credit",
-    oracle=_MTA_SQL.format(events="events", horizon="{h}").format(
-        h=MTA_HORIZON_MIN
-    ),
+    lambda d, events: _MTA_SQL.format(events=events, horizon=MTA_HORIZON_MIN),
+    ("events",),
     doc="Multi-touch attribution: every view within the purchase horizon "
     f"({MTA_HORIZON_MIN} min) "
     "(the day-scale widening of attribution_interval_join's pairs) gets "
@@ -1336,11 +1289,6 @@ MTA_HORIZON_MIN = 24 * 60  # wider than the 1:1 interval join: multi-touch
     "twin of the interval join: who gets paid, not just who matched.",
     tags=("temporal", "attribution", "window"),
 )
-def multitouch_attribution_credit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_mta_ev")
-    return spark.sql(
-        _MTA_SQL.format(events="sales_telegram_bot_data_pipeline_mta_ev", horizon=MTA_HORIZON_MIN)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1367,13 +1315,12 @@ ORDER BY dow, hour_of_day
 """
 
 
-@register(
+register_sql(
     "activity_heatmap_dow_hour",
-    oracle=_HEATMAP_SQL.format(
-        daynum="datediff('day', DATE '1970-01-01', CAST(ts AS DATE))",
-        hour="EXTRACT(hour FROM ts)",
-        events="events",
+    lambda d, events: _HEATMAP_SQL.format(
+        daynum=d.days_since("ts"), hour=d.extract("hour", "ts"), events=events
     ),
+    ("events",),
     doc="Day-of-week x hour activity heatmap: event counts and global "
     "share per (dow, hour) cell — the seasonality fingerprint behind "
     "cron-shaped ingest anomalies.  Weekday from pure epoch-day integer "
@@ -1382,15 +1329,6 @@ ORDER BY dow, hour_of_day
     "function; one map-combinable aggregate over a 168-cell domain.",
     tags=("temporal", "timeseries", "agg"),
 )
-def activity_heatmap_dow_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_hm_ev")
-    return spark.sql(
-        _HEATMAP_SQL.format(
-            daynum="datediff(to_date(ts), to_date('1970-01-01'))",
-            hour="hour(ts)",
-            events="sales_telegram_bot_data_pipeline_hm_ev",
-        )
-    )
 
 
 # --------------------------------------------------------------------------

@@ -35,12 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import register
+from ..registry import register, register_sql
 from ..sources.tables import load_table
-
-
-def _dec(col: str, prec: int = 18, scale: int = 2) -> F.Column:
-    return F.col(col).cast(f"decimal({prec},{scale})")
+from .relational import _dec
 
 
 def _rev() -> F.Column:
@@ -88,31 +85,19 @@ LIMIT 100
 """
 
 
-def _views(spark: SparkSession, sf_dir: str, tables: list[str]) -> dict[str, str]:
-    """Register temp views for the template tables; returns the name map."""
-    out = {}
-    for t in tables:
-        view = f"sales_telegram_bot_data_pipeline_th_{t}"
-        load_table(spark, sf_dir, t).createOrReplaceTempView(view)
-        out[t] = view
-    return out
-
-
-@register(
+register_sql(
     "q2_min_cost_supplier",
-    oracle=_Q2_SQL.format(
-        lineitem="lineitem", supplier="supplier", nation="nation",
-        region="region", part="part", part_pred=_Q2_PART_PRED,
+    lambda d, lineitem, supplier, nation, region, part: _Q2_SQL.format(
+        lineitem=lineitem, supplier=supplier, nation=nation, region=region,
+        part=part, part_pred=_Q2_PART_PRED,
     ),
+    ("lineitem", "supplier", "nation", "region", "part"),
     doc="TPC-H Q2 shape: correlated scalar MIN subquery over an "
     "eligible-supplier relation referenced twice (Catalyst decorrelates "
     "to per-part aggregate + join); supply costs derived from lineitem "
     "pre-aggregated before any dim join.",
     tags=("relational", "subquery", "tpch"),
 )
-def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _views(spark, sf_dir, ["lineitem", "supplier", "nation", "region", "part"])
-    return spark.sql(_Q2_SQL.format(**v, part_pred=_Q2_PART_PRED))
 
 
 # ---------------------------------------------------------------------------
@@ -260,18 +245,18 @@ ORDER BY part_value DESC, partkey
 """
 
 
-@register(
+register_sql(
     "q11_important_part_value",
-    oracle=_Q11_SQL.format(lineitem="lineitem", supplier="supplier", nation="nation"),
+    lambda d, lineitem, supplier, nation: _Q11_SQL.format(
+        lineitem=lineitem, supplier=supplier, nation=nation
+    ),
+    ("lineitem", "supplier", "nation"),
     doc="TPC-H Q11 shape: per-part value vs a scalar-subquery fraction of "
     "the grand total over the SAME derived relation (planned as one "
     "aggregate reused twice + broadcast scalar); integer-unit compare "
     "(vu*1000 > total) keeps the threshold exact cross-engine.",
     tags=("relational", "subquery", "tpch"),
 )
-def q11_important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _views(spark, sf_dir, ["lineitem", "supplier", "nation"])
-    return spark.sql(_Q11_SQL.format(**v))
 
 
 # ---------------------------------------------------------------------------
@@ -333,17 +318,15 @@ ORDER BY s.s_suppkey
 """
 
 
-@register(
+register_sql(
     "q15_top_revenue_supplier",
-    oracle=_Q15_SQL.format(lineitem="lineitem", supplier="supplier"),
+    lambda d, lineitem, supplier: _Q15_SQL.format(lineitem=lineitem, supplier=supplier),
+    ("lineitem", "supplier"),
     doc="TPC-H Q15 shape: quarterly revenue view, suppliers whose revenue "
     "equals the scalar MAX over that view (view computed once, scalar "
     "broadcast back); exact-decimal equality so ties are engine-stable.",
     tags=("relational", "subquery", "tpch"),
 )
-def q15_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _views(spark, sf_dir, ["lineitem", "supplier"])
-    return spark.sql(_Q15_SQL.format(**v))
 
 
 # ---------------------------------------------------------------------------
@@ -361,17 +344,15 @@ WHERE p.p_brand = 'Brand#13' AND p.p_type = 'MEDIUM'
 """
 
 
-@register(
+register_sql(
     "q17_small_quantity_revenue",
-    oracle=_Q17_SQL.format(lineitem="lineitem", part="part"),
+    lambda d, lineitem, part: _Q17_SQL.format(lineitem=lineitem, part=part),
+    ("lineitem", "part"),
     doc="TPC-H Q17 shape: correlated scalar AVG per part (decorrelated to "
     "a per-part aggregate + join — the fact table is scanned twice but "
     "never re-scanned per row), single-row global answer.",
     tags=("relational", "subquery", "tpch"),
 )
-def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _views(spark, sf_dir, ["lineitem", "part"])
-    return spark.sql(_Q17_SQL.format(**v))
 
 
 # ---------------------------------------------------------------------------
@@ -567,9 +548,10 @@ ORDER BY cntrycode
 """
 
 
-@register(
+register_sql(
     "q22_dormant_high_balance",
-    oracle=_Q22_SQL.format(customer="customer", orders="orders"),
+    lambda d, customer, orders: _Q22_SQL.format(customer=customer, orders=orders),
+    ("customer", "orders"),
     doc="TPC-H Q22 shape: customers above the positive-balance average "
     "(scalar subquery, broadcast one-row CROSS JOIN) with no orders in "
     "the recent window (NOT EXISTS anti join on a filtered orders scan), "
@@ -577,6 +559,3 @@ ORDER BY cntrycode
     "multiply-through in exact decimal.",
     tags=("relational", "anti-join", "tpch"),
 )
-def q22_dormant_high_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _views(spark, sf_dir, ["customer", "orders"])
-    return spark.sql(_Q22_SQL.format(**v))

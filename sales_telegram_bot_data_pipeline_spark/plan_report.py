@@ -16,8 +16,6 @@ from __future__ import annotations
 import re
 import sys
 
-from pyspark.sql import SparkSession
-
 
 def plan_facts(plan: str) -> dict:
     # char class includes ._ so catalog-qualified scans ('Scan parquet

@@ -25,7 +25,11 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .functions.dialect import DUCKDB, SPARK
+from .sources.tables import table_view
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
+SqlBuilder = Callable[..., str]  # (dialect, *table_refs) -> SQL text
 
 
 @dataclass(frozen=True)
@@ -123,3 +127,17 @@ def register(name: str, oracle: str | None = None, doc: str = "", tags: tuple[st
         return fn
 
     return deco
+
+
+def register_sql(
+    name: str, build: SqlBuilder, tables: tuple[str, ...], doc: str = "", tags: tuple[str, ...] = ()
+) -> None:
+    """Register a query whose Spark SQL and DuckDB oracle come from one
+    builder: ``build(dialect, *table_refs)``.  The oracle reads the base
+    tables by name; the Spark callable binds each to its session view
+    (``sources.tables.table_view``) and runs the same builder's text."""
+
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return spark.sql(build(SPARK, *[table_view(spark, sf_dir, t) for t in tables]))
+
+    register(name, oracle=build(DUCKDB, *tables), doc=doc, tags=tags)(fn)

@@ -9,6 +9,7 @@ pushdown + column pruning for free.  At cluster scale the same call reads
 
 from __future__ import annotations
 
+import hashlib
 import os
 import weakref
 
@@ -27,8 +28,6 @@ TABLE_NAMES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Session-scoped catalog cache: resolving a parquet table re-reads footers
 # and rebuilds the file index on EVERY spark.read call (~130 ms/table
@@ -81,6 +80,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(path)
     per_session[key] = df
     return df
+
+
+def table_view(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """Bind ``load_table(spark, sf_dir, name)`` to a session temp view and
+    return the view's name.  The name is the table name plus a short md5 of
+    the absolute ``sf_dir``, so callers on different data directories in one
+    session never rebind each other's views."""
+    view = f"{name}_{hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]}"
+    load_table(spark, sf_dir, name).createOrReplaceTempView(view)
+    return view
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

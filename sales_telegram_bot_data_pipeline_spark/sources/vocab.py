@@ -23,10 +23,6 @@ def load_vocabulary_from_text(spark: SparkSession, path: str) -> list[str]:
     return _normalize_to_words(lines, "value")
 
 
-def load_vocabulary_from_column(df, col: str) -> list[str]:
-    return _normalize_to_words(df, col)
-
-
 def _normalize_to_words(df, col: str) -> list[str]:
     words = (
         df.select(F.explode(F.split(normalize_col(col), r"\s+")).alias("w"))

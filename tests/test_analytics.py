@@ -10,11 +10,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from sales_telegram_bot_data_pipeline_spark.queries import REGISTRY
 from sales_telegram_bot_data_pipeline_spark.operators.analytics import (
     K_ANON_THRESHOLD,
     association_rules_lift,
-    chi_squared_independence,
-    k_anonymity_audit,
     rfm_segmentation,
     spearman_rank_correlation,
 )
@@ -56,7 +55,7 @@ def test_rfm_quintiles_balanced_and_complete(spark):
 
 
 def test_chi2_marginals_consistent(spark):
-    rows = chi_squared_independence(spark, SF_SMOKE).collect()
+    rows = REGISTRY["chi_squared_independence"].fn(spark, SF_SMOKE).collect()
     n_events = load_table(spark, SF_SMOKE, "events").count()
     assert sum(r.n_obs for r in rows) == n_events
     # expected counts under independence also total N (cells cover all obs)
@@ -142,7 +141,7 @@ def test_rank_ops_empty_input(spark, tmp_path):
 
 
 def test_k_anonymity_accounts_for_every_customer(spark):
-    rows = k_anonymity_audit(spark, SF_SMOKE).collect()
+    rows = REGISTRY["k_anonymity_audit"].fn(spark, SF_SMOKE).collect()
     n_cust = load_table(spark, SF_SMOKE, "customer").count()
     assert sum(r.n_customers for r in rows) == n_cust
     for r in rows:

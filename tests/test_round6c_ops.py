@@ -8,17 +8,16 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from sales_telegram_bot_data_pipeline_spark.queries import REGISTRY
 from sales_telegram_bot_data_pipeline_spark.operators import similarity as sim
 from sales_telegram_bot_data_pipeline_spark.operators.similarity import (
-    _emb_view,
     _pq_sql,
     SPARK,
     TOP_K,
     N_QUERIES,
     knn_cosine_bruteforce,
-    knn_cosine_pq,
-    matryoshka_recall_audit,
 )
+from sales_telegram_bot_data_pipeline_spark.sources.tables import table_view
 
 from conftest import SF_SMOKE
 
@@ -28,7 +27,7 @@ def test_pq_full_candidate_pool_equals_bruteforce(spark, monkeypatch):
     exact-cosine rerank must reproduce brute force bit-for-bit — pins that
     the approximation lives ONLY in candidate selection, never scoring."""
     monkeypatch.setattr(sim, "PQ_CAND", 10_000)
-    full = spark.sql(_pq_sql(SPARK, _emb_view(spark, SF_SMOKE))).collect()
+    full = spark.sql(_pq_sql(SPARK, table_view(spark, SF_SMOKE, "embeddings"))).collect()
     bf = knn_cosine_bruteforce(spark, SF_SMOKE).collect()
     key = lambda r: (r["query_id"], r["rank"])
     assert {key(r): (r["neighbor_id"], r["cosine"]) for r in full} == {
@@ -40,7 +39,7 @@ def test_pq_shape_and_rerank_scores_exact(spark):
     """Default PQ output: TOP_K dense ranks per query; every returned
     cosine equals the exact cosine brute force computes for that same
     (query, neighbor) pair — ADC never leaks into the emitted score."""
-    rows = knn_cosine_pq(spark, SF_SMOKE).collect()
+    rows = REGISTRY["knn_cosine_pq"].fn(spark, SF_SMOKE).collect()
     per_q = {}
     for r in rows:
         per_q.setdefault(r["query_id"], []).append(r)
@@ -49,7 +48,7 @@ def test_pq_shape_and_rerank_scores_exact(spark):
         (r["query_id"], r["neighbor_id"]): r["cosine"]
         for r in spark.sql(
             sim._rank_window_sql(
-                sim._bruteforce_scored(SPARK, _emb_view(spark, SF_SMOKE)), k=10_000
+                sim._bruteforce_scored(SPARK, table_view(spark, SF_SMOKE, "embeddings")), k=10_000
             )
         ).collect()
     }
@@ -65,7 +64,7 @@ def test_pq_shape_and_rerank_scores_exact(spark):
 
 
 def test_matryoshka_full_dim_self_check(spark):
-    rows = {r["dim"]: r for r in matryoshka_recall_audit(spark, SF_SMOKE).collect()}
+    rows = {r["dim"]: r for r in REGISTRY["matryoshka_recall_audit"].fn(spark, SF_SMOKE).collect()}
     assert set(rows) == set(sim._MRL_DIMS)
     full = max(sim._MRL_DIMS)
     assert rows[full]["recall_at_k"] == 1.0
@@ -93,7 +92,7 @@ def test_kcore_converged_and_matches_python_peel(spark):
     assert all(r["core_degree"] >= KCORE_K for r in rows)
 
     pairs = spark.sql(
-        _neardup_banded_sql(SPARK, _emb_view(spark, SF_SMOKE))
+        _neardup_banded_sql(SPARK, table_view(spark, SF_SMOKE, "embeddings"))
     ).collect()
     adj: dict[int, set] = {}
     for p in pairs:
@@ -119,10 +118,9 @@ def test_gopher_gate_metrics_consistent(spark):
         GOPHER_MIN_MEAN_WLEN,
         GOPHER_MIN_STOP_HITS,
         GOPHER_MIN_WORDS,
-        gopher_quality_gate,
     )
 
-    rows = gopher_quality_gate(spark, SF_SMOKE).collect()
+    rows = REGISTRY["gopher_quality_gate"].fn(spark, SF_SMOKE).collect()
     assert len(rows) == 500
     for r in rows:
         expect = (
@@ -142,14 +140,13 @@ def test_gopher_gate_metrics_consistent(spark):
 
 def test_softdedup_weights_semantics(spark):
     from sales_telegram_bot_data_pipeline_spark.operators.dedup import (
-        dedup_minhash_lsh,
         softdedup_weights,
     )
 
     rows = softdedup_weights(spark, SF_SMOKE).collect()
     assert len(rows) == 500
     paired = set()
-    for p in dedup_minhash_lsh(spark, SF_SMOKE).collect():
+    for p in REGISTRY["dedup_minhash_lsh"].fn(spark, SF_SMOKE).collect():
         paired.add(p["doc_a"])
         paired.add(p["doc_b"])
     for r in rows:

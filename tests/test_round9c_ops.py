@@ -4,7 +4,7 @@ James-Stein, exact PR-AUC, and dyadic RBO re-derived in pure Python."""
 from __future__ import annotations
 
 from sales_telegram_bot_data_pipeline_spark import queries as q
-from sales_telegram_bot_data_pipeline_spark.sources.tables import load_table
+from sales_telegram_bot_data_pipeline_spark.sources.tables import load_table, table_view
 
 from conftest import SF_SMOKE
 
@@ -102,10 +102,9 @@ def test_pr_auc_matches_python(spark):
     # Python twin on the engine's own scored relation (logreg is pinned
     # elsewhere): grouped average precision with nano-unit truncation
     from sales_telegram_bot_data_pipeline_spark.operators.lm_quality import _logreg_sql
-    from sales_telegram_bot_data_pipeline_spark.operators.curation import _doc_view
     from sales_telegram_bot_data_pipeline_spark.functions.dialect import SPARK
 
-    view = _doc_view(spark, SF_SMOKE)
+    view = table_view(spark, SF_SMOKE, "documents")
     scored = spark.sql(_logreg_sql(SPARK, view)).selectExpr(
         "quality_prob AS v", "(lang = 'en') AS pos"
     ).collect()

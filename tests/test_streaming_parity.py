@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from sales_telegram_bot_data_pipeline_spark.sinks.kv import InMemoryKVStore, write_kv_upsert
 from sales_telegram_bot_data_pipeline_spark.sinks.webhook import WebhookBatcher
-from sales_telegram_bot_data_pipeline_spark.sources.tables import load_table
+from sales_telegram_bot_data_pipeline_spark.sources.tables import load_table, table_view
 from sales_telegram_bot_data_pipeline_spark.streaming.revalidate import run_revalidation_batch
 from sales_telegram_bot_data_pipeline_spark.streaming.windows import (
     attribution_join_stream,
@@ -380,18 +380,14 @@ def test_lsh_admission_stream_matches_batch(spark, scratch):
     that have band rows — docs too short to shingle never reach the stream
     and are admitted trivially by the batch query)."""
     from sales_telegram_bot_data_pipeline_spark.functions.dialect import SPARK as SPARK_D
-    from sales_telegram_bot_data_pipeline_spark.operators.dedup import (
-        INC_MOD,
-        _bands_rel_sql,
-        _doc_view,
-    )
+    from sales_telegram_bot_data_pipeline_spark.operators.dedup import INC_MOD, _bands_rel_sql
     from sales_telegram_bot_data_pipeline_spark.queries import REGISTRY
     from sales_telegram_bot_data_pipeline_spark.streaming.windows import (
         lsh_admission_stream,
         run_to_completion,
     )
 
-    view = _doc_view(spark, SF_SMOKE)
+    view = table_view(spark, SF_SMOKE, "documents")
     bands = spark.sql(_bands_rel_sql(SPARK_D, view)).localCheckpoint()
     index_df = bands.where(F.col("doc_id") % INC_MOD != 0)
     batch_bands = bands.where(F.col("doc_id") % INC_MOD == 0)
